@@ -6,6 +6,23 @@ Stage DAG over the warehouse (each stage checkpointed + metered):
        │                                         │                │
        └── (window W2 turn ordering) ── triples_ds (direct DS) ◄──┘
 
+The KB inputs (``aliases``, ``facts``) are pinned once per pipeline
+instance (``localCheckpoint``), lazily, inside the first stage build that
+reads them -- ``entity_mentions`` for the aliases, ``rm_pairs`` for the
+facts -- so every later build reads one materialized copy and a fully
+resumed run evaluates neither.
+
+Stages that do not depend on one another build concurrently, on threads
+that inherit the caller's Spark job group (``‖`` = concurrent):
+
+  kg_tables:   kg_entities ‖ kg_edges ‖ kg_components
+  run_graphs:  RM branch ‖ EM branch ‖ triples_mention, where a branch is
+               <ns>_feature_rows, then graph_tables(<ns>):
+                 <ns>_features ‖ <ns>_types ‖ <ns>_mention_type
+                   ‖ <ns>_mention_type_test
+                 then <ns>_mention_feature ‖ <ns>_mention_feature_test
+                 then <ns>_feature_type
+
 ``triples_ds`` is the flagship output before any learning: every DS-labeled
 pair materializes as canonicalized (subj, pred, obj) edges — the reference's
 ``convertPredictionToJson.py`` output shape, with subj/obj = mention
@@ -16,6 +33,10 @@ with embedding-scored predictions over the same tables.
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,6 +45,18 @@ from ..functions.features import (make_em_features_udf,
 from ..functions.hashing import h64
 from ..operators import ds_label, graphs, mentions, pairs as pairs_op, vocab
 from ..sources.catalog import Warehouse
+
+
+def _concurrently(spark: SparkSession, *builds):
+    """Run independent stage builds on threads that inherit the caller's
+    Spark local properties (its job group included).  Returns the results
+    in argument order; a build's exception is re-raised once every build
+    has finished.  Each build gets its own copy of the properties: a
+    query sets its execution id there while it runs."""
+    with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b))
+                   for b in builds]
+        return [f.result() for f in futures]
 
 
 class KGPipeline:
@@ -45,6 +78,17 @@ class KGPipeline:
         self.use_pandas_udfs = use_pandas_udfs
         self.partitions = partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions"))
+        # KB DataFrame handed in (keyed by identity) -> its pinned copy
+        self._pinned: dict[DataFrame, DataFrame] = {}
+        self._pin_lock = threading.Lock()
+
+    def _kb(self, df: DataFrame) -> DataFrame:
+        """The pinned copy of a KB input, materialized on first use.  Call
+        it only inside a stage build, so a resumed stage scans nothing."""
+        with self._pin_lock:
+            if df not in self._pinned:
+                self._pinned[df] = df.localCheckpoint(eager=True)
+            return self._pinned[df]
 
     # ------------------------------------------------------------- stages
     def curated_turns(self, turns: DataFrame) -> DataFrame:
@@ -78,14 +122,15 @@ class KGPipeline:
 
     def entity_mentions(self, candidates: DataFrame, aliases: DataFrame) -> DataFrame:
         def build():
-            linked = ds_label.link_entities(candidates, aliases, self.n_salts)
+            linked = ds_label.link_entities(candidates, self._kb(aliases),
+                                            self.n_salts)
             return ds_label.entity_mentions(linked)
         return self.wh.ensure("entity_mentions", build, bucket_hint="mention_key")
 
     def rm_pairs(self, ems: DataFrame, facts: DataFrame) -> DataFrame:
         def build():
             cand = pairs_op.rm_candidates(ems)
-            return pairs_op.label_pairs(cand, facts)
+            return pairs_op.label_pairs(cand, self._kb(facts))
         return self.wh.ensure("rm_pairs", build, bucket_hint="mention_key")
 
     def triples_ds(self, rm: DataFrame) -> DataFrame:
@@ -167,31 +212,28 @@ class KGPipeline:
         """Vocab + the three bipartite graphs + train/test variants."""
         train = feature_rows.where(~F.col("is_test"))
         test = feature_rows.where(F.col("is_test"))
-
-        voc = self.wh.ensure(f"{prefix}_features",
-                             lambda: vocab.build_vocab(train))
         mentions_lab = feature_rows.select(
             "mention_key", "labels", "is_test").distinct()
-        types = self.wh.ensure(
-            f"{prefix}_types",
-            lambda: vocab.build_type_vocab(
-                mentions_lab.where(~F.col("is_test"))
-                .select("mention_key", F.explode("labels").alias("label")),
-            ))
 
-        mf_train = self.wh.ensure(
-            f"{prefix}_mention_feature",
-            lambda: graphs.mention_feature_graph(vocab.gate_to_vocab(train, voc)))
-        mf_test = self.wh.ensure(
-            f"{prefix}_mention_feature_test",
-            lambda: graphs.mention_feature_graph(vocab.gate_to_vocab(test, voc)))
-        mt_train = self.wh.ensure(
-            f"{prefix}_mention_type",
-            lambda: graphs.mention_type_graph(
-                mentions_lab.where(~F.col("is_test")), neg_label_weight))
-        mt_test = self.wh.ensure(
-            f"{prefix}_mention_type_test",
-            lambda: graphs.mention_type_graph(mentions_lab.where(F.col("is_test"))))
+        def ensure(table: str, build):
+            return lambda: self.wh.ensure(f"{prefix}_{table}", build)
+
+        voc, types, mt_train, mt_test = _concurrently(
+            self.spark,
+            ensure("features", lambda: vocab.build_vocab(train)),
+            ensure("types", lambda: vocab.build_type_vocab(
+                mentions_lab.where(~F.col("is_test"))
+                .select("mention_key", F.explode("labels").alias("label")))),
+            ensure("mention_type", lambda: graphs.mention_type_graph(
+                mentions_lab.where(~F.col("is_test")), neg_label_weight)),
+            ensure("mention_type_test", lambda: graphs.mention_type_graph(
+                mentions_lab.where(F.col("is_test")))))
+        mf_train, mf_test = _concurrently(
+            self.spark,
+            ensure("mention_feature", lambda: graphs.mention_feature_graph(
+                vocab.gate_to_vocab(train, voc))),
+            ensure("mention_feature_test", lambda: graphs.mention_feature_graph(
+                vocab.gate_to_vocab(test, voc))))
         ft = self.wh.ensure(
             f"{prefix}_feature_type",
             lambda: graphs.feature_type_graph(mf_train, mt_train))
@@ -210,19 +252,27 @@ class KGPipeline:
         linking, canonicalization, graph materialize") — run after
         :meth:`run`; reads the candidates + rm_pairs stages."""
         from . import kg_materialize as kg
-        linked = ds_label.link_entities(self.wh.read("candidates"),
-                                        aliases, self.n_salts)
-        nodes = self.wh.ensure(
-            "kg_entities", lambda: kg.entity_nodes(linked, aliases),
-            bucket_hint="entity_id")
-        pairs = self.wh.read("rm_pairs")
-        edges = self.wh.ensure(
-            "kg_edges",
-            lambda: kg.canonical_edges_from_pairs(pairs, facts, aliases),
-            bucket_hint="subj_id")
-        comps = self.wh.ensure(
-            "kg_components", lambda: kg.resolve_entities(aliases),
-            bucket_hint="entity_id")
+
+        def build_entities():
+            al = self._kb(aliases)
+            linked = ds_label.link_entities(self.wh.read("candidates"), al,
+                                            self.n_salts)
+            return kg.entity_nodes(linked, al)
+
+        def build_edges():
+            return kg.canonical_edges_from_pairs(
+                self.wh.read("rm_pairs"), self._kb(facts), self._kb(aliases))
+
+        nodes, edges, comps = _concurrently(
+            self.spark,
+            lambda: self.wh.ensure("kg_entities", build_entities,
+                                   bucket_hint="entity_id"),
+            lambda: self.wh.ensure("kg_edges", build_edges,
+                                   bucket_hint="subj_id"),
+            lambda: self.wh.ensure(
+                "kg_components",
+                lambda: kg.resolve_entities(self._kb(aliases)),
+                bucket_hint="entity_id"))
         return {"kg_entities": nodes, "kg_edges": edges,
                 "kg_components": comps}
 
@@ -245,12 +295,14 @@ class KGPipeline:
         s = self.wh.read("sentences")
         e = self.wh.read("entity_mentions")
         r = self.wh.read("rm_pairs")
-        rm_rows = self.rm_feature_rows(r, s, brown)
-        em_rows = self.em_feature_rows(e, s, brown)
-        out = {"rm": self.graph_tables(rm_rows, "rm", neg_label_weight),
-               "em": self.graph_tables(em_rows, "em", neg_label_weight)}
-        self.triples_mention(r)
-        return out
+        rm, em, _ = _concurrently(
+            self.spark,
+            lambda: self.graph_tables(self.rm_feature_rows(r, s, brown), "rm",
+                                      neg_label_weight),
+            lambda: self.graph_tables(self.em_feature_rows(e, s, brown), "em",
+                                      neg_label_weight),
+            lambda: self.triples_mention(r))
+        return {"rm": rm, "em": em}
 
     # ------------------------------------------------- learned inference
     def run_learned(self, turns: DataFrame, aliases: DataFrame,
@@ -293,10 +345,7 @@ class KGPipeline:
             "mention_id", "type_id", F.col("score_norm").alias("score"))
         metrics = ev.evaluate_rm_neg(preds.select("mention_id", "type_id"),
                                      gt, none_id)
-        rm_pairs = self.wh.read("rm_pairs").withColumn(
-            "is_test", F.pmod(h64(F.concat(F.col("conv_id"),
-                                           F.lit("|split"))), F.lit(5)) == 0
-        ).where("is_test")
+        rm_pairs = self.with_split(self.wh.read("rm_pairs")).where("is_test")
         triples = inf.materialize_triples(preds, rm_pairs, rm["types"])
         triples = self.wh.write("triples_learned", triples)
         return {"embs": embs, "best": best, "theta": theta,

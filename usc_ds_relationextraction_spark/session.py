@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 16g, in megabytes."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 16 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "usc-ds-re-spark",
     master: str | None = None,
@@ -21,11 +27,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the core count — at cluster scale you
-    would set 2-3x total cores; AQE coalesces small partitions either way.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    host's CPU count).  ``shuffle_partitions`` defaults to the core count —
+    at cluster scale you would set 2-3x total cores; AQE coalesces small
+    partitions either way.  The driver heap is ``$SPARK_DRIVER_MEM``
+    (default: half the host's physical memory, at most 16g).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -49,7 +57,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()))
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():

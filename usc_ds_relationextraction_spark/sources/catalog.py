@@ -3,8 +3,9 @@
 north_rule requirements: "checkpoint-resumable" and "per-partition lineage
 and metrics tables".  Every pipeline stage materializes to a table under a
 warehouse directory; re-running a pipeline skips stages whose output
-already exists (resume), and each write appends a row to ``_metrics``
-(stage, rows, wall_ms, input fingerprint).
+was written completely (``_SUCCESS`` present; resume), and each
+write appends a row to ``_metrics`` (stage, rows, wall_ms, input
+fingerprint).
 
 Format: parquet by default; ``format='iceberg'`` passes straight through
 when an Iceberg catalog is configured on the session (the sandbox has no
@@ -24,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,16 +37,18 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self.fmt = fmt
+        # stages build concurrently (KGPipeline); one lock keeps each
+        # _metrics.jsonl record a whole line
+        self._metrics_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, f"{name}.{self.fmt}")
 
     def exists(self, name: str) -> bool:
-        p = self.path(name)
-        return os.path.exists(os.path.join(p, "_SUCCESS")) or (
-            os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p))
-        )
+        # done only once the write job committed _SUCCESS: part files
+        # without it are a torn write, which ensure() rebuilds
+        return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.format(self.fmt).load(self.path(name))
@@ -59,7 +63,10 @@ class Warehouse:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(self.path(name))
-        out = self.read(name)
+        # parquet reads back with the schema just written, which skips the
+        # schema-inference job a plain read runs
+        out = (self.spark.read.schema(df.schema).parquet(self.path(name))
+               if self.fmt == "parquet" else self.read(name))
         self._record(name, out, time.time() - t0, bucket_hint)
         return out
 
@@ -116,7 +123,7 @@ class Warehouse:
         if n <= self.MAX_PER_PARTITION_DETAIL:
             rec["per_partition"] = counts
         mpath = os.path.join(self.root, "_metrics.jsonl")
-        with open(mpath, "a") as f:
+        with self._metrics_lock, open(mpath, "a") as f:
             f.write(json.dumps(rec) + "\n")
 
     def metrics(self) -> list[dict]:
