@@ -4,7 +4,11 @@
 
 A table is a directory directly under the warehouse root that holds
 parquet part files (``<stage>.parquet/``); lineage files such as
-``_metrics.jsonl`` are not tables.  Two tables are equal when they hold
+``_metrics.jsonl`` are not tables.  A directory holding ``_CURRENT`` is an
+``incremental_agg_sink`` target (a stream's output, e.g. ``kg_stream``'s
+edge table): it is one table whose rows are the version the pointer
+names, and older versions not yet deleted are ignored.  Either root may
+itself be such a target.  Two tables are equal when they hold
 the same rows the same number of times, in any order and any split into
 part files; columns are matched by name.  Prints one line per table and
 exits 1 if any table differs or exists on one side only, or if neither
@@ -21,12 +25,27 @@ from collections import Counter
 import pyarrow.parquet as pq
 
 
+def current_version(target: str) -> str | None:
+    """The version directory a stream target's ``_CURRENT`` names, or
+    None when ``target`` is not a stream target."""
+    ptr = os.path.join(target, "_CURRENT")
+    if not os.path.isfile(ptr):
+        return None
+    with open(ptr) as fh:
+        return os.path.join(target, fh.read().strip())
+
+
 def tables(root: str) -> dict[str, str]:
     """Table name -> directory, for every table under ``root``."""
+    if cur := current_version(root):
+        # named alike on both sides, whatever the two roots are called
+        return {"(stream target)": cur}
     out = {}
     for name in sorted(os.listdir(root)):
         path = os.path.join(root, name)
-        if os.path.isdir(path) and any(
+        if cur := current_version(path):
+            out[name] = cur
+        elif os.path.isdir(path) and any(
                 f.endswith(".parquet") for _, _, files in os.walk(path)
                 for f in files):
             out[name] = path

@@ -78,6 +78,9 @@ def test_streaming_dedup_sink_wired(spark, tiny_corpus, tmp_path):
          .foreachBatch(streaming_dedup_sink(spark, target, keys))
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
     got = spark.read.parquet(target)
     assert got.count() == got.distinct().count() > 0

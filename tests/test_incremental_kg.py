@@ -11,11 +11,16 @@ re-aggregate from scratch."""
 from __future__ import annotations
 
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
+from test_stage_builds import _counted
 
+from usc_ds_relationextraction_spark.sources import synthetic as syn
 from usc_ds_relationextraction_spark.sources.catalog import (
     incremental_agg_sink, merge_additive_sql, read_current_version)
+from usc_ds_relationextraction_spark.streaming import ingest
 
 
 def test_merge_additive_sql_shape():
@@ -33,9 +38,33 @@ def _rows(spark, data):
         data, "subj string, pred string, obj string, n_support long")
 
 
-def test_incremental_sink_merges_and_replays(spark, tmp_path):
+def _parquet_reads(spark, monkeypatch):
+    """Records every (path, frame) a ``read...parquet(path)`` returns."""
+    seen = []
+    reader = type(spark.read)
+    plain = reader.parquet
+
+    def spy(self, *paths, **kw):
+        df = plain(self, *paths, **kw)
+        seen.append((paths[0], df))
+        return df
+    monkeypatch.setattr(reader, "parquet", spy)
+    return seen
+
+
+def _assert_read_with_inferred_schema(spark, seen, version):
+    """The sink read the committed ``version`` with exactly the schema a
+    schema-inferring read finds."""
+    reads = [(p, df) for p, df in seen if os.path.basename(p) == version]
+    assert reads, f"the sink never read {version}"
+    for path, df in reads:
+        assert df.schema == spark.read.parquet(path).schema, path
+
+
+def test_incremental_sink_merges_and_replays(spark, tmp_path, monkeypatch):
     """Two batches fold additively; replaying a committed batch (the only
     replay foreachBatch can issue) is a no-op in both crash windows."""
+    seen = _parquet_reads(spark, monkeypatch)
     target = str(tmp_path / "edges")
     sink = incremental_agg_sink(spark, target,
                                 ["subj", "pred", "obj"], ["n_support"])
@@ -46,6 +75,7 @@ def test_incremental_sink_merges_and_replays(spark, tmp_path):
            for r in read_current_version(spark, target).collect()}
     assert got == {("a", "r", "b"): 3, ("c", "r", "d"): 1,
                    ("e", "r", "f"): 1}
+    _assert_read_with_inferred_schema(spark, seen, "v0")
     # crash-replay of the committed batch 1: pointer already names it
     sink(_rows(spark, [("a", "r", "b", 1), ("e", "r", "f", 1)]), 1)
     got2 = {(r.subj, r.pred, r.obj): r.n_support
@@ -75,9 +105,10 @@ def test_incremental_sink_crash_before_commit(spark, tmp_path):
     assert got == {("a", "r", "b"): 2}
 
 
-def test_incremental_sink_min_max_cols(spark, tmp_path):
+def test_incremental_sink_min_max_cols(spark, tmp_path, monkeypatch):
     """min/max measures merge associatively across batches alongside sums
     (the node-table shape: additive counts + min-observed surface)."""
+    seen = _parquet_reads(spark, monkeypatch)
     target = str(tmp_path / "nodes")
     sink = incremental_agg_sink(
         spark, target, ["k"], ["n"], min_cols=["lo"], max_cols=["hi"])
@@ -88,6 +119,7 @@ def test_incremental_sink_min_max_cols(spark, tmp_path):
     got = {r.k: (r.n, r.lo, r.hi)
            for r in read_current_version(spark, target).collect()}
     assert got == {"a": (3, "b", 9), "b": (1, "q", 1)}
+    _assert_read_with_inferred_schema(spark, seen, "v0")
 
 
 def test_merge_additive_sql_min_max():
@@ -100,8 +132,6 @@ def test_merge_additive_sql_min_max():
 def test_stream_kg_nodes_equals_batch(spark, tiny_corpus, tmp_path):
     """Incrementally-maintained node table == batch aggregate of the same
     chunk→alias-link extraction."""
-    from usc_ds_relationextraction_spark.sources import synthetic as syn
-    from usc_ds_relationextraction_spark.streaming import ingest
     from usc_ds_relationextraction_spark.functions.tokenize import (
         pos_tags_col, tokens_col)
     from usc_ds_relationextraction_spark.operators.mentions import (
@@ -111,7 +141,10 @@ def test_stream_kg_nodes_equals_batch(spark, tiny_corpus, tmp_path):
     tiny_corpus.repartition(3).write.mode("overwrite").parquet(src)
     q = ingest.stream_kg_nodes(spark, src, str(tmp_path / "ckpt"),
                                str(tmp_path / "nodes"))
-    q.awaitTermination(180)
+    try:
+        assert q.awaitTermination(180)
+    finally:
+        q.stop()
     got = {r.entity_id: (r.n_mentions, r.first_surface, r.entity_type)
            for r in read_current_version(
                spark, str(tmp_path / "nodes")).collect()}
@@ -136,15 +169,15 @@ def test_stream_kg_nodes_equals_batch(spark, tiny_corpus, tmp_path):
 def test_stream_kg_edges_equals_batch(spark, tiny_corpus, tmp_path):
     """readStream → triple evidence → incremental merge across ≥2
     micro-batches == one batch aggregate over the same extraction."""
-    from usc_ds_relationextraction_spark.sources import synthetic as syn
-    from usc_ds_relationextraction_spark.streaming import ingest
-
     src = str(tmp_path / "src")
     # several input files so maxFilesPerTrigger=1 yields several batches
     tiny_corpus.repartition(4).write.mode("overwrite").parquet(src)
     q = ingest.stream_kg_edges(spark, src, str(tmp_path / "ckpt"),
                                str(tmp_path / "edges"))
-    q.awaitTermination(180)
+    try:
+        assert q.awaitTermination(180)
+    finally:
+        q.stop()
     n_batches = len(os.listdir(os.path.join(str(tmp_path / "ckpt"),
                                             "commits")))
     assert n_batches >= 2, "merge path must actually iterate"
@@ -158,6 +191,43 @@ def test_stream_kg_edges_equals_batch(spark, tiny_corpus, tmp_path):
         .agg(F.count(F.lit(1)).alias("n_support"))
     want = {(r.subj, r.pred, r.obj): r.n_support for r in batch.collect()}
     assert got == want and len(want) > 0
+
+
+@pytest.mark.parametrize("builder, reads", [
+    (ingest.stream_kg_edges, (1, 1)),   # aliases and facts
+    (ingest.stream_kg_nodes, (1, 0)),   # aliases only
+], ids=["edges", "nodes"])
+def test_stream_kb_evaluated_once_per_query(spark, tiny_corpus, tmp_path,
+                                            monkeypatch, builder, reads):
+    """The stream's static KB side is evaluated once when the query
+    starts, not once per micro-batch; a restart evaluates it once more."""
+    aliases, al_acc, n_al = _counted(spark, syn.kb_aliases(spark))
+    facts, fa_acc, n_fa = _counted(spark, syn.kb_facts(spark))
+    monkeypatch.setattr(syn, "kb_aliases", lambda _: aliases)
+    monkeypatch.setattr(syn, "kb_facts", lambda _: facts)
+    src, held = tmp_path / "src", tmp_path / "held"
+    tiny_corpus.repartition(4).write.parquet(str(src))
+    held.mkdir()
+    last = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))[-1]
+    shutil.move(str(src / last), str(held / last))
+
+    def run() -> int:
+        q = builder(spark, str(src), str(tmp_path / "ck"),
+                    str(tmp_path / "out"))
+        try:
+            assert q.awaitTermination(180)
+        finally:
+            q.stop()
+        return len([p for p in q.recentProgress if p["numInputRows"] > 0])
+
+    def evaluations():
+        return (al_acc.value / n_al, fa_acc.value / n_fa)
+
+    assert run() == 3
+    assert evaluations() == reads
+    shutil.move(str(held / last), str(src / last))
+    assert run() == 1
+    assert evaluations() == tuple(2 * r for r in reads)
 
 
 def test_batch_split_invariance_property(spark, tmp_path):

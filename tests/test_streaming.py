@@ -45,7 +45,10 @@ def test_readstream_end_to_end(spark, tiny_corpus, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     tiny_corpus.write.mode("overwrite").parquet(src)
     q = ingest.stream_triples(spark, src, ckpt, out)
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
     streamed = spark.read.parquet(out).select(
         "subj", "pred", "obj", "conv_id", "turn_idx").distinct()
     am = ingest._alias_map(spark)
@@ -62,7 +65,10 @@ def test_windowed_counts_stream_equals_batch(spark, tiny_corpus, tmp_path):
     src = str(tmp_path / "wsrc")
     tiny_corpus.write.mode("overwrite").parquet(src)
     q = ingest.stream_windowed_counts(spark, src, query_name="win_counts")
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
     streamed = spark.sql("SELECT * FROM win_counts")
     am = ingest._alias_map(spark)
     fm = ingest._fact_map(spark)
@@ -100,7 +106,10 @@ def test_stateful_entity_tracking(spark, tiny_corpus, tmp_path):
     tiny_corpus.repartition(4).write.mode("overwrite").parquet(src)
     q = ingest.stream_entity_updates(spark, src, query_name="ent_updates",
                                      max_files_per_trigger=1)
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
     n_batches = len([p for p in q.recentProgress
                      if p["numInputRows"] > 0])
     got = (spark.sql("SELECT * FROM ent_updates")

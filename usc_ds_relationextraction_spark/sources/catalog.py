@@ -351,7 +351,10 @@ def incremental_agg_sink(spark: SparkSession, target: str,
             return
         merged = delta
         if committed >= 0:
-            cur = spark.read.parquet(os.path.join(target, f"v{committed}"))
+            # every version is written with the delta's schema: reading
+            # with it skips the schema-inference job a plain read runs
+            cur = spark.read.schema(delta.schema).parquet(
+                os.path.join(target, f"v{committed}"))
             merged = cur.unionByName(delta).groupBy(*key_cols).agg(*_aggs())
         vdir = os.path.join(target, f"v{batch_id}")
         merged.write.mode("overwrite").parquet(vdir)

@@ -15,6 +15,16 @@ The KB lookup has two interchangeable implementations:
  - ``turn_local_triples``: alias/fact map literals baked into the plan —
    join-free, only for fixture-scale KBs.
 
+Spark re-plans a stream-static join on every micro-batch, static side
+included, and the KB frames are ``createDataFrame(list)`` frames whose
+every evaluation starts Python-worker tasks.  So each stream builder
+pins its static KB side once, when the query is built (``_pinned``:
+``localCheckpoint(eager=True)``, as ``KGPipeline._kb`` does in batch).
+The broadcasts still run every micro-batch, but they read the pinned
+copy in JVM-only jobs; a restart builds the query again and pins again,
+once.  The map-literal fallback collects the KB at build time and needs
+no pin.
+
 Equivalence with the batch path is tested: pairing is within
 (turn, sentence) in both, so the streamed triples match ``triples_ds``
 exactly on the same corpus.
@@ -103,6 +113,13 @@ def _terminal_positions(toks: str) -> Column:
         F.filter(F.sequence(F.lit(1), F.size(toks)),
                  lambda i: F.element_at(F.col(toks), i).isin(*TERMINALS))
     ).otherwise(F.array().cast("array<int>"))
+
+
+def _pinned(kb: DataFrame) -> DataFrame:
+    """The static KB side of a stream query, evaluated once, now, and
+    pinned for the query's life: every micro-batch's broadcast reads this
+    copy instead of re-evaluating ``kb``."""
+    return kb.localCheckpoint(eager=True)
 
 
 def _alias_map(spark: SparkSession) -> Column:
@@ -258,8 +275,9 @@ def stream_triples(spark: SparkSession, source_dir: str,
     stream = (spark.readStream.schema(schema).format("parquet")
               .load(source_dir))
     if kb_join:
-        triples = turn_local_triples_join(stream, syn.kb_aliases(spark),
-                                          syn.kb_facts(spark))
+        triples = turn_local_triples_join(stream,
+                                          _pinned(syn.kb_aliases(spark)),
+                                          _pinned(syn.kb_facts(spark)))
     else:
         # map-literal fallback: join-free plan, fine for fixture-sized KBs
         triples = turn_local_triples(stream, _alias_map(spark),
@@ -311,8 +329,8 @@ def stream_windowed_counts(spark: SparkSession, source_dir: str,
     watermark finalizes them)."""
     stream = (spark.readStream.schema(schema).format("parquet")
               .load(source_dir))
-    triples = turn_local_triples_join(stream, syn.kb_aliases(spark),
-                                      syn.kb_facts(spark))
+    triples = turn_local_triples_join(stream, _pinned(syn.kb_aliases(spark)),
+                                      _pinned(syn.kb_facts(spark)))
     agg = windowed_triple_counts(triples, window, watermark)
     return (agg.writeStream.format("memory").queryName(query_name)
             .outputMode("complete").trigger(availableNow=True).start())
@@ -388,8 +406,8 @@ def stream_entity_updates(spark: SparkSession, source_dir: str,
         .withColumn("chunk", F.explode(np_chunks_col("toks", "pos"))) \
         .select("conv_id", "turn_idx",
                 F.col("chunk.surface").alias("surface"))
-    al = syn.kb_aliases(spark).select(
-        F.col("alias").alias("surface"), "entity_id").distinct()
+    al = _pinned(syn.kb_aliases(spark).select(
+        F.col("alias").alias("surface"), "entity_id").distinct())
     linked = t.join(F.broadcast(al), on="surface") \
         .select("conv_id", "turn_idx", "entity_id")
     upd = conversation_entity_updates(linked)
@@ -415,13 +433,18 @@ def stream_kg_edges(spark: SparkSession, source_dir: str,
     batch-additive); compose ``streaming_dedup_sink`` at
     (subj, pred, obj, conv_id) grain and aggregate on read if needed.
     ``maxFilesPerTrigger=1`` forces one micro-batch per input file so the
-    merge path actually iterates (the testable property)."""
+    merge path actually iterates (the testable property).
+
+    The static KB side (aliases, facts) is pinned once per query start,
+    here, before ``start()``: every micro-batch still broadcasts it, but
+    from the pinned copy, and a restart from the checkpoint pins again."""
     from ..sources.catalog import incremental_agg_sink
     stream = (spark.readStream.schema(schema).format("parquet")
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
               .load(source_dir))
     evidence = turn_local_triples_join(
-        stream, syn.kb_aliases(spark), syn.kb_facts(spark)) \
+        stream, _pinned(syn.kb_aliases(spark)),
+        _pinned(syn.kb_facts(spark))) \
         .select("subj", "pred", "obj", F.lit(1).alias("n_support"))
     sink = incremental_agg_sink(spark, target,
                                 key_cols=["subj", "pred", "obj"],
@@ -456,9 +479,9 @@ def stream_kg_nodes(spark: SparkSession, source_dir: str,
         .withColumn("pos", pos_tags_col("toks")) \
         .withColumn("chunk", F.explode(np_chunks_col("toks", "pos"))) \
         .select(F.col("chunk.surface").alias("surface"))
-    al = syn.kb_aliases(spark).select(
-        F.col("alias").alias("surface"), "entity_id", "entity_type") \
-        .dropDuplicates(["surface", "entity_id"])
+    al = _pinned(syn.kb_aliases(spark).select(
+        F.col("alias").alias("surface"), "entity_id", "entity_type")
+        .dropDuplicates(["surface", "entity_id"]))
     evidence = t.join(F.broadcast(al), on="surface") \
         .select("entity_id", F.lit(1).alias("n_mentions"),
                 F.col("surface").alias("first_surface"), "entity_type")
