@@ -82,10 +82,10 @@ def _linked_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     al = _fx(spark, sf_dir, "kb_aliases") \
         .select(F.col("alias").alias("surface"), "entity_id",
                 "entity_type").distinct()
-    # strategy is self-selecting (BENCH.md skew bench conclusion): the
-    # alias dim broadcasts when it fits, falls back to AQE skew-join,
-    # and salts only when neither applies — never the ×S replication
-    # tax by default
+    # strategy is self-selecting (adaptive_dim_join's docstring has the
+    # measurement): the alias dim broadcasts when it fits, falls back to
+    # AQE skew-join, and salts only when neither applies — never the ×S
+    # replication tax by default
     linked = adaptive_dim_join(cand, al, on=["surface"], n_salts=8,
                                big_unique=F.concat_ws(
                                    "_", "conv_id", "turn_idx", "start",
@@ -475,8 +475,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Q.update(gate_round4.queries())
     from usc_ds_relationextraction_spark.plans import gate_round5
     Q.update(gate_round5.queries())
-    from usc_ds_relationextraction_spark.plans import curation_queries
-    Q.update(curation_queries.queries())
     return _curated(Q)
 
 
@@ -522,10 +520,6 @@ _LEAD = [
     "m1_sgns_epoch", "m2_ple_epoch", "m3_transe_epoch",
     "kg_entity_nodes", "kg_canonical_edges", "kg_entity_resolution",
     "kg_collapsed_edges", "mm_decode_real",
-    # round-5 session-2 curation family (operators/curation.py)
-    "cur_decontam", "cur_pii_scrub", "cur_repetition",
-    "cur_sample_stratified", "cur_pack_sequences", "cur_corpus_gate",
-    "cur_token_rarity",
 ]
 
 
@@ -787,6 +781,4 @@ FROM (
     O.update(gate_round4.oracles())
     from usc_ds_relationextraction_spark.plans import gate_round5
     O.update(gate_round5.oracles())
-    from usc_ds_relationextraction_spark.plans import curation_queries
-    O.update(curation_queries.oracles())
     return O

@@ -34,13 +34,6 @@ def main() -> None:
                     help="joint mode: RM nets + EM nets + TransE in one "
                          "epoch loop (reference retype.cpp:149-161)")
     ap.add_argument("--shuffle-partitions", type=int, default=32)
-    ap.add_argument("--curate", action="store_true",
-                    help="prepend the checkpointed PII-redaction "
-                         "curation stage (rewrites turn text, so the "
-                         "reference text-equality contract is waived; "
-                         "checkpoints land in <warehouse>_curated so "
-                         "raw and curated runs never share stages — "
-                         "applies to --learned runs too)")
     args = ap.parse_args()
 
     # Inside spark-submit the session already exists; getOrCreate attaches.
@@ -66,9 +59,7 @@ def main() -> None:
     brown_df = spark.read.parquet(f"{fx}/brown_clusters.parquet")
     brown = {r["word"]: r["cluster"] for r in brown_df.collect()}
 
-    pipe = KGPipeline(spark, args.warehouse,
-                      partitions=args.shuffle_partitions,
-                      curate=args.curate)
+    pipe = KGPipeline(spark, args.warehouse)
     out: dict = {"sf_dir": args.sf_dir, "warehouse": args.warehouse}
     if args.learned:
         res = pipe.run_learned(turns, aliases, facts, brown,

@@ -27,13 +27,12 @@ TOKENS = [
 def test_query_oracle_keys_align():
     q = entry.queries()
     o = entry.oracle_sql()
-    # every oracle refers to an implemented query
-    missing = set(o) - set(q)
-    assert not missing, f"oracles without queries: {missing}"
-    # the vast majority of queries carry a SQL oracle; only explicitly
-    # non-SQL-expressible ops (stubbed codecs etc.) may omit one
-    no_oracle = set(q) - set(o)
-    assert no_oracle <= {"mm_decode_features"}, no_oracle
+    # every query carries a SQL oracle and every oracle an implementation
+    assert set(q) == set(o), set(q) ^ set(o)
+    # the snapshot-ordering lists name only registered queries
+    # (_curated skips unknown names, so a stale entry would go unnoticed)
+    stale = (set(entry._LEAD) | set(entry._DEPRIORITIZED)) - set(q)
+    assert not stale, f"ordering names without queries: {stale}"
 
 
 def test_sql_pos_tagger_agrees_with_python():

@@ -2,7 +2,7 @@
 
 Trains the CoType-RM model on a small corpus and asserts the tuned
 extraction F1 clears 0.9 — the sandbox stand-in for the BASELINE.json
-P/R>=0.95 parity target (full-size runs reach 0.97/0.97, see BENCH.md).
+P/R>=0.95 parity target (full-size runs reach 0.97/0.97).
 """
 
 from __future__ import annotations

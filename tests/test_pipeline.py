@@ -94,29 +94,3 @@ def test_metrics_lineage(pipe):
         if "per_partition" in r:  # full detail only at human-sized counts
             assert r["rows"] == sum(r["per_partition"])
             assert len(r["per_partition"]) == r["n_partitions"]
-
-
-def test_curate_stage_redacts_and_checkpoints(spark, tiny_corpus,
-                                              tmp_path_factory):
-    """The opt-in curation stage: PII-planted turns are redacted, clean
-    turns pass byte-identical, and the stage participates in
-    warehouse checkpoint/resume + lineage metrics."""
-    from pyspark.sql import functions as F
-    wh = str(tmp_path_factory.mktemp("wh_curate"))
-    p = KGPipeline(spark, wh)
-    planted = tiny_corpus.withColumn(
-        "text", F.when(F.col("turn_idx") == 0,
-                       F.concat("text", F.lit(" mail bob@x.org")))
-        .otherwise(F.col("text")))
-    cur = p.curated_turns(planted)
-    assert cur.where(F.col("text").contains("bob@x.org")).count() == 0
-    assert cur.where(F.col("text").contains("<EMAIL>")).count() == \
-        planted.where(F.col("turn_idx") == 0).count()
-    # non-planted turns byte-identical
-    a = planted.where("turn_idx > 0").select("conv_id", "turn_idx", "text")
-    b = cur.where("turn_idx > 0").select("conv_id", "turn_idx", "text")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # checkpointed: a second call with empty input returns the table
-    again = p.curated_turns(planted.limit(0))
-    assert again.count() == cur.count()
-    assert "turns_curated" in {r["stage"] for r in p.wh.metrics()}

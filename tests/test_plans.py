@@ -22,10 +22,6 @@ HEADLINE = [
     "dedup_exact", "dedup_minhash", "ann_topk_lsh", "ann_topk_ivf",
     "ann_topk_ivf_nprobe", "f13_dep_features", "s1_reference_replay",
     "dedup_substring_spans", "p3_span_alignment",
-    # round-5 curation family: pure-JVM by design — any BatchEvalPython
-    # here means an accidental interpreted/Python path crept in
-    "cur_decontam", "cur_pii_scrub", "cur_repetition",
-    "cur_token_rarity", "cur_sample_stratified", "cur_pack_sequences",
 ]
 
 
@@ -107,19 +103,3 @@ def test_er_blocking_plan_hygiene(spark):
     assert "ArrowEvalPython" not in plan  # fully JVM-side
     assert "BroadcastHashJoin" in plan    # df window broadcasts
 
-
-def test_curation_plan_shapes(spark):
-    """Decontam: the eval shingle set joins broadcast (corpus side never
-    shuffles for the join).  Sampling: a stateless filter — no shuffle
-    anywhere in the plan.  Packing: exactly one window sort per stratum
-    stream, no extra exchange beyond the window's partitioning."""
-    dec = _plan(spark, "cur_decontam")
-    assert "BroadcastHashJoin" in dec
-    smp = _plan(spark, "cur_sample_stratified")
-    assert "Exchange" not in smp
-    pk = _plan(spark, "cur_pack_sequences")
-    # formatted mode prints each node in the tree AND the detail section;
-    # the invariant is one Window node over exactly one Exchange (the
-    # stratum partitioning) — no second shuffle
-    assert "Window" in pk
-    assert pk.count("Exchange (") == 1  # tree line only, once

@@ -109,7 +109,10 @@ def test_graph_tables_jobs_inherit_job_group(built, spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     # seven stage writes, each at least one job, all in the caller's group
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 7
-    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    # no new ungrouped job; the status store may drop old ones meanwhile
+    # (spark.ui.retainedJobs evicts the oldest in batches), so compare
+    # by difference, not equality
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
 
 
 def test_branch_exception_propagates_from_run_graphs(built, monkeypatch,

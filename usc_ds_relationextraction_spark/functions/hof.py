@@ -6,9 +6,7 @@ lambda as the full upstream expression — re-evaluated at every
 reference.  A LAMBDA VARIABLE, by contrast, is bound once per row.
 ``let`` turns the former into the latter structurally (the streaming
 pair generator's fix, ``streaming/ingest.py``; measured there at 52 s →
-6 s on 175k turns, and again on the curation family where an unbound
-``split()`` inside ``shingles``'s slice lambda made duplicate-n-gram
-metrics O(tokens²) per doc).
+6 s on 175k turns).
 """
 
 from __future__ import annotations

@@ -54,8 +54,8 @@ def adaptive_dim_join(
 ) -> DataFrame:
     """Fact ⋈ dimension with a self-selecting physical strategy.
 
-    Encodes the conclusion of the skew bench (BENCH.md: AQE skew-join
-    1.52s vs unconditional salting 5.13s at the same scale): salting is
+    Encodes the conclusion of the skew bench (AQE skew-join 1.52s vs
+    unconditional salting 5.13s at the same scale): salting is
     the ESCALATION, not the default.
 
       1. dimension fits the broadcast limit  → broadcast hash join

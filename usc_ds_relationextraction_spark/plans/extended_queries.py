@@ -18,10 +18,11 @@ from ..functions.text_analysis import (BPE_RE, LANGS, STOPWORDS,
                                        lang_id, quality_metrics,
                                        token_counts)
 from ..operators import dedup, multimodal, similarity
-# gate thresholds are single-sourced in operators/curation.py: the base
-# corpus_filter verdict, the extended cur_corpus_gate (which re-derives
-# keep from raw columns), and both DuckDB twins must agree on them
-from ..operators.curation import GATE_LANG, GATE_QUALITY_MIN
+
+# corpus-filter gate thresholds, shared by the Spark verdict and its
+# DuckDB twin (median quality_milli at sf0.01 is 462; 450 keeps ~60%)
+GATE_QUALITY_MIN = 450
+GATE_LANG = "en"
 
 EMB_DIM = 64
 N_BITS_SIMHASH = 16
@@ -86,8 +87,7 @@ def corpus_filter_verdicts(docs: DataFrame, *,
     metric-table self-joins), so the only shuffles are the ones the
     dedup stage already pays (banded LSH + min-label rounds) plus a
     single 1:1 equi-join of metrics↔canonical flags on uniform doc_id.
-    Shared by the ``corpus_filter*`` driver queries and
-    ``scripts/corpus_filter_bench.py`` (the scale harness)."""
+    Shared by the ``corpus_filter*`` driver queries."""
     canon = cluster_canonical_docs(docs,
                                    min_jaccard_milli=min_jaccard_milli)
     j = filter_metrics(docs).join(canon, "doc_id")
@@ -138,11 +138,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             candidates=dedup.lsh_candidate_pairs(docs))
     Q["dedup_mask_spans"] = mask_spans
 
-    # bodies live at module level (cluster_canonical_docs /
-    # corpus_filter_verdicts) so scripts/corpus_filter_bench.py drives
-    # the SAME composition at scale.  Thresholds here are corpus-
-    # calibrated constants (median quality_milli at sf0.01 is 462; 450
-    # keeps ~60%).
     Q["dedup_cluster_canonical"] = lambda s, sf: cluster_canonical_docs(
         _t(s, sf, "documents"))
 

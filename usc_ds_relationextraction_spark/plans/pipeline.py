@@ -60,24 +60,10 @@ def _concurrently(spark: SparkSession, *builds):
 
 
 class KGPipeline:
-    def __init__(self, spark: SparkSession, warehouse_dir: str,
-                 n_salts: int = 8, use_pandas_udfs: bool = True,
-                 partitions: int | None = None, curate: bool = False):
+    def __init__(self, spark: SparkSession, warehouse_dir: str):
         self.spark = spark
-        # curate is a CONSTRUCTOR flag, not a run() parameter, and it
-        # suffixes the warehouse root: every downstream stage's
-        # checkpoint is derived from (possibly redacted) text, so a raw
-        # and a curated run must never share 'sentences'/... tables —
-        # with a shared namespace, toggling the flag against an existing
-        # warehouse would silently resume stale raw-derived stages (and
-        # the learned path would ignore the flag entirely).
-        self.curate = curate
-        self.wh = Warehouse(spark, warehouse_dir +
-                            ("_curated" if curate else ""))
-        self.n_salts = n_salts
-        self.use_pandas_udfs = use_pandas_udfs
-        self.partitions = partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
+        self.wh = Warehouse(spark, warehouse_dir)
+        self.partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # KB DataFrame handed in (keyed by identity) -> its pinned copy
         self._pinned: dict[DataFrame, DataFrame] = {}
         self._pin_lock = threading.Lock()
@@ -91,39 +77,23 @@ class KGPipeline:
             return self._pinned[df]
 
     # ------------------------------------------------------------- stages
-    def curated_turns(self, turns: DataFrame) -> DataFrame:
-        """Opt-in corpus-hygiene stage ahead of extraction: PII
-        redaction over the turn text (`operators/curation.PII_PATTERNS`,
-        applied globally in order), checkpointed like every stage so a
-        resume never re-scans the raw corpus.  OFF by default
-        (constructor flag ``curate=False``, which also namespaces the
-        warehouse): redaction rewrites text, and the per-turn
-        text-equality contract vs the reference holds only on raw turns.
-        Pure per-row regex — adds no shuffle ahead of `sentences`'s
-        repartition-by-range."""
-        def build():
-            from ..operators.curation import redact_pii
-            return turns.withColumn("text", redact_pii(F.col("text")))
-        return self.wh.ensure("turns_curated", build, bucket_hint="conv_id")
-
     def sentences(self, turns: DataFrame) -> DataFrame:
         def build():
             # repartition-by-range on conv_id (north_rule): co-locates a
             # conversation's turns; downstream sentence-keyed ops stay local
             t = turns.repartitionByRange(self.partitions, "conv_id", "turn_idx")
-            return mentions.sentences_table(t, self.use_pandas_udfs)
+            return mentions.sentences_table(t)
         return self.wh.ensure("sentences", build, bucket_hint="conv_id")
 
     def candidates(self, sentences: DataFrame) -> DataFrame:
         return self.wh.ensure(
             "candidates",
-            lambda: mentions.candidates_table(sentences, self.use_pandas_udfs),
+            lambda: mentions.candidates_table(sentences),
             bucket_hint="conv_id")
 
     def entity_mentions(self, candidates: DataFrame, aliases: DataFrame) -> DataFrame:
         def build():
-            linked = ds_label.link_entities(candidates, self._kb(aliases),
-                                            self.n_salts)
+            linked = ds_label.link_entities(candidates, self._kb(aliases))
             return ds_label.entity_mentions(linked)
         return self.wh.ensure("entity_mentions", build, bucket_hint="mention_key")
 
@@ -207,8 +177,8 @@ class KGPipeline:
             return self.with_split(out)
         return self.wh.ensure("em_feature_rows", build, bucket_hint="mention_key")
 
-    def graph_tables(self, feature_rows: DataFrame, prefix: str,
-                     neg_label_weight: float = 1.0) -> dict[str, DataFrame]:
+    def graph_tables(self, feature_rows: DataFrame,
+                     prefix: str) -> dict[str, DataFrame]:
         """Vocab + the three bipartite graphs + train/test variants."""
         train = feature_rows.where(~F.col("is_test"))
         test = feature_rows.where(F.col("is_test"))
@@ -225,7 +195,7 @@ class KGPipeline:
                 mentions_lab.where(~F.col("is_test"))
                 .select("mention_key", F.explode("labels").alias("label")))),
             ensure("mention_type", lambda: graphs.mention_type_graph(
-                mentions_lab.where(~F.col("is_test")), neg_label_weight)),
+                mentions_lab.where(~F.col("is_test")))),
             ensure("mention_type_test", lambda: graphs.mention_type_graph(
                 mentions_lab.where(F.col("is_test")))))
         mf_train, mf_test = _concurrently(
@@ -255,8 +225,7 @@ class KGPipeline:
 
         def build_entities():
             al = self._kb(aliases)
-            linked = ds_label.link_entities(self.wh.read("candidates"), al,
-                                            self.n_salts)
+            linked = ds_label.link_entities(self.wh.read("candidates"), al)
             return kg.entity_nodes(linked, al)
 
         def build_edges():
@@ -279,8 +248,6 @@ class KGPipeline:
     # ------------------------------------------------------------ full run
     def run(self, turns: DataFrame, aliases: DataFrame,
             facts: DataFrame) -> DataFrame:
-        if self.curate:
-            turns = self.curated_turns(turns)
         s = self.sentences(turns)
         c = self.candidates(s)
         e = self.entity_mentions(c, aliases)
@@ -288,8 +255,8 @@ class KGPipeline:
         return self.triples_ds(r)
 
     def run_graphs(self, turns: DataFrame, aliases: DataFrame,
-                   facts: DataFrame, brown: dict[str, str],
-                   neg_label_weight: float = 1.0) -> dict[str, DataFrame]:
+                   facts: DataFrame,
+                   brown: dict[str, str]) -> dict[str, DataFrame]:
         """Full graph-construction DAG (SURVEY §7.2 step 4)."""
         self.run(turns, aliases, facts)
         s = self.wh.read("sentences")
@@ -297,10 +264,8 @@ class KGPipeline:
         r = self.wh.read("rm_pairs")
         rm, em, _ = _concurrently(
             self.spark,
-            lambda: self.graph_tables(self.rm_feature_rows(r, s, brown), "rm",
-                                      neg_label_weight),
-            lambda: self.graph_tables(self.em_feature_rows(e, s, brown), "em",
-                                      neg_label_weight),
+            lambda: self.graph_tables(self.rm_feature_rows(r, s, brown), "rm"),
+            lambda: self.graph_tables(self.em_feature_rows(e, s, brown), "em"),
             lambda: self.triples_mention(r))
         return {"rm": rm, "em": em}
 

@@ -415,7 +415,3 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str) -> str:
         f.write("ok\n")
     return out
 
-
-def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = ensure_fixtures(spark, sf_dir)
-    return spark.read.parquet(os.path.join(out, "transcripts.parquet"))

@@ -19,11 +19,11 @@ Spark re-plans a stream-static join on every micro-batch, static side
 included, and the KB frames are ``createDataFrame(list)`` frames whose
 every evaluation starts Python-worker tasks.  So each stream builder
 pins its static KB side once, when the query is built (``_pinned``:
-``localCheckpoint(eager=True)``, as ``KGPipeline._kb`` does in batch).
-The broadcasts still run every micro-batch, but they read the pinned
-copy in JVM-only jobs; a restart builds the query again and pins again,
-once.  The map-literal fallback collects the KB at build time and needs
-no pin.
+``localCheckpoint(eager=True)``, as ``KGPipeline._kb`` does in batch,
+read back as one partition).  The broadcasts still run every
+micro-batch, but they read the pinned copy in one-task JVM-only jobs; a
+restart builds the query again and pins again, once.  The map-literal
+fallback collects the KB at build time and needs no pin.
 
 Equivalence with the batch path is tested: pairing is within
 (turn, sentence) in both, so the streamed triples match ``triples_ds``
@@ -118,8 +118,10 @@ def _terminal_positions(toks: str) -> Column:
 def _pinned(kb: DataFrame) -> DataFrame:
     """The static KB side of a stream query, evaluated once, now, and
     pinned for the query's life: every micro-batch's broadcast reads this
-    copy instead of re-evaluating ``kb``."""
-    return kb.localCheckpoint(eager=True)
+    copy instead of re-evaluating ``kb``.  The pin keeps ``kb``'s
+    partitions, so it evaluates them in parallel; the pinned copy is read
+    as one partition, so each broadcast is a single task."""
+    return kb.localCheckpoint(eager=True).coalesce(1)
 
 
 def _alias_map(spark: SparkSession) -> Column:
