@@ -80,6 +80,49 @@ def test_kg_tables_resume_from_warehouse(kg):
     assert again["kg_edges"].count() == e0
 
 
+def test_kg_entities_equal_link_entities_nodes(spark, tiny_corpus,
+                                               tmp_path):
+    """``kg_entities`` is built from the ``entity_mentions`` stage; it must
+    equal the nodes of a fresh ``link_entities`` over the candidates, row
+    for row, with an ambiguous alias (one surface, two entities) and
+    lowercase alias variants in the dictionary."""
+    from usc_ds_relationextraction_spark.operators import ds_label
+    from usc_ds_relationextraction_spark.plans import kg_materialize as kgm
+
+    rows = [tuple(r) for r in syn.kb_aliases(spark).collect()]
+    assert any(a != a.lower() and (a.lower(), e, t) in rows
+               for a, e, t in rows), "no lowercase alias variant"
+    # the first entity's cased name also names the second entity
+    (a0, e0, _), (_, e1, t1) = rows[0], next(
+        r for r in rows if r[1] != rows[0][1])
+    aliases = spark.createDataFrame(rows + [(a0, e1, t1)],
+                                    syn.kb_aliases(spark).schema)
+    p = KGPipeline(spark, str(tmp_path))
+    p.run(tiny_corpus, aliases, syn.kb_facts(spark))
+    got = p.kg_tables(aliases, syn.kb_facts(spark))["kg_entities"]
+    want = kgm.entity_nodes(ds_label.link_entities(
+        p.wh.read("candidates"), aliases), aliases)
+    got_rows = got.collect()
+    assert sorted(map(tuple, got_rows)) == \
+        sorted(map(tuple, want.select(*got.columns).collect()))
+    surfaces = {r.entity_id: r.surfaces.split(",") for r in got_rows}
+    assert a0 in surfaces[e0] and a0 in surfaces.get(e1, []), \
+        "the ambiguous alias linked no mention"
+
+
+def test_spark_lower_equals_python_lower_on_kb_aliases(spark):
+    """The session maps case with the JVM, not ICU; alias blocking lowers
+    every alias, so both must agree on every alias the KB fixtures hold."""
+    import __spark_entry__ as e
+
+    for aliases in (syn.kb_aliases(spark), e._fx(spark, "sf0.01",
+                                                  "kb_aliases")):
+        rows = aliases.select("alias", F.lower("alias").alias("low")) \
+            .collect()
+        assert rows
+        assert all(r.low == r.alias.lower() for r in rows)
+
+
 def test_connected_components_chain(spark):
     """A 4-vertex chain needs multiple propagation rounds to flood the
     min id to the far end; plus an isolated vertex and a 2-cycle."""

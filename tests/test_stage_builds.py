@@ -75,6 +75,25 @@ def test_concurrent_first_use_pins_once(spark, tmp_path):
     assert acc.value == n
 
 
+def test_once_builds_once_under_concurrent_first_calls():
+    """``graph_tables`` shares one thunk per table among its concurrent
+    builds: every caller gets the one result, and it is made once."""
+    from usc_ds_relationextraction_spark.plans.pipeline import _once
+
+    made = []
+    get = _once(lambda: made.append(object()) or made[-1])
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futures = [pool.submit(get) for _ in range(64)]
+            got = [f.result(timeout=30) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert len(made) == 1
+    assert all(g is made[0] for g in got)
+
+
 def test_metrics_one_line_per_stage(built):
     with open(os.path.join(built["wh"], "_metrics.jsonl")) as fh:
         lines = fh.read().splitlines()
@@ -90,7 +109,8 @@ def test_metrics_one_line_per_stage(built):
 def test_write_reads_back_the_inferred_schema(built):
     """``Warehouse.write`` passes the written schema to its re-read; it
     must equal what schema inference finds, nested nullability included."""
-    wh = built["pipe"].wh
+    # a fresh instance has no written schemas to pass, so it infers each
+    wh = Warehouse(built["pipe"].spark, built["wh"])
     for name, df in built["out"].items():
         assert df.schema == wh.read(name).schema, name
 

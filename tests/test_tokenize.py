@@ -51,3 +51,24 @@ def test_chunker_jvm_vs_pandas(spark, tiny_corpus):
     cols = ["conv_id", "turn_idx", "sent_idx", "start", "end", "surface"]
     assert sorted(map(tuple, a.select(*cols).collect())) == \
            sorted(map(tuple, b.select(*cols).collect()))
+
+
+def test_fused_sentence_udf_equals_python_twins(spark, tiny_corpus):
+    """One Arrow pass per turn gives what the plain-Python splitter,
+    tokenizer and tagger give, empty and null turn text included."""
+    extra = spark.createDataFrame(
+        [("c_empty", 0, "user", "", None, None),
+         ("c_null", 0, "user", None, None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    turns = tiny_corpus.unionByName(extra)
+    cols = ["conv_id", "turn_idx", "sent_idx", "sentence", "tokens", "pos"]
+    got = sorted(map(tuple, m.sentences_table(turns).select(*cols).collect()))
+    want = []
+    for r in turns.select("conv_id", "turn_idx", "text").collect():
+        for i, s in enumerate(tk.split_sentences_py(r.text)):
+            toks = tk.tokenize_py(s)
+            want.append((r.conv_id, r.turn_idx, i, s, toks,
+                         [tk._tag_one(t) for t in toks]))
+    assert got == sorted(want)
+    assert not {r[0] for r in got} & {"c_empty", "c_null"}

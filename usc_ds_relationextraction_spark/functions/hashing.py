@@ -82,11 +82,6 @@ def h64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def h64_sql(expr: str) -> str:
-    """Spark-SQL text form of :func:`h64` (for selectExpr composition)."""
-    return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
-
-
 def h64_duckdb(expr: str) -> str:
     """DuckDB text form — MUST stay value-identical with :func:`h64`."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::bigint)"
@@ -105,10 +100,6 @@ def u01(col: Column | str, salt: str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return h64(F.concat_ws("\x1f", c, F.lit(salt))) / F.lit(float(1 << 60))
-
-
-def u01_py(s: str, salt: str) -> float:
-    return h64_py(f"{s}\x1f{salt}") / float(1 << 60)
 
 
 def pick(col: Column | str, salt: str, n: int) -> Column:

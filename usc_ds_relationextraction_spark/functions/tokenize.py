@@ -8,9 +8,10 @@ bypass it entirely by ingesting pre-tokenized reference JSON.
 
 Two implementations, tested for mutual agreement:
 
-1. **pandas/Arrow UDFs** (``split_sentences_udf``, ``tokenize_pos_udf``) —
-   the north_star-mandated path: Arrow batches in, vectorized pandas string
-   ops inside, Arrow batches out.  No row-at-a-time Spark UDFs anywhere.
+1. **one pandas/Arrow UDF** (``sentences_udf``) — the north_star-mandated
+   path: split, tokenize and tag a turn in one Arrow pass (one Python
+   worker per task, not one per chained UDF).  No row-at-a-time Spark
+   UDFs anywhere.
 2. **JVM column expressions** (``tokens_col``, ``pos_tags_col``) — a
    whole-stage-codegen fast path for pre-tokenized (space-delimited) text;
    also the form replicable in ANSI SQL for the DuckDB correctness oracle.
@@ -131,26 +132,28 @@ def tokenize_py(sent: str) -> list[str]:
 _UDF_CACHE: dict[str, object] = {}
 
 
-def split_sentences_udf():
-    if "split" not in _UDF_CACHE:
-        @pandas_udf("array<string>")
-        def _split(texts: pd.Series) -> pd.Series:
-            return texts.map(
-                lambda t: split_sentences_py(t) if isinstance(t, str) else [])
-        _UDF_CACHE["split"] = _split
-    return _UDF_CACHE["split"]
+SENTENCES_SCHEMA = ("array<struct<sentence: string, tokens: array<string>, "
+                    "pos: array<string>>>")
 
 
-def tokenize_pos_udf():
-    if "tokpos" not in _UDF_CACHE:
-        @pandas_udf("struct<tokens: array<string>, pos: array<string>>")
-        def _tokpos(sents: pd.Series) -> pd.DataFrame:
-            toks = sents.map(
-                lambda s: _TOK_RE.findall(s) if isinstance(s, str) else [])
-            pos = toks.map(lambda ts: [_tag_one(t) for t in ts])
-            return pd.DataFrame({"tokens": toks, "pos": pos})
-        _UDF_CACHE["tokpos"] = _tokpos
-    return _UDF_CACHE["tokpos"]
+def sentences_py(text: str | None) -> list[dict]:
+    """A turn's sentences, each with its tokens and rule POS tags."""
+    out = []
+    for sent in split_sentences_py(text) if isinstance(text, str) else []:
+        toks = tokenize_py(sent)
+        out.append({"sentence": sent, "tokens": toks,
+                    "pos": [_tag_one(t) for t in toks]})
+    return out
+
+
+def sentences_udf():
+    """Arrow twin of :func:`sentences_py`: text → SENTENCES_SCHEMA."""
+    if "sentences" not in _UDF_CACHE:
+        @pandas_udf(SENTENCES_SCHEMA)
+        def _sentences(texts: pd.Series) -> pd.Series:
+            return texts.map(sentences_py)
+        _UDF_CACHE["sentences"] = _sentences
+    return _UDF_CACHE["sentences"]
 
 
 # ----------------------------------------------------------- JVM fast path

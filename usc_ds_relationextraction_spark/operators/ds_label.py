@@ -54,3 +54,17 @@ def entity_mentions(linked: DataFrame) -> DataFrame:
             F.sort_array(F.collect_set("entity_type")).alias("labels"),
         )
     )
+
+
+def linked_from_mentions(ems: DataFrame, aliases: DataFrame) -> DataFrame:
+    """The :func:`link_entities` rows back from :func:`entity_mentions`
+    output: one row per (mention, matching alias row), with that row's
+    ``entity_type``.  A broadcast join on (surface, entity_id) recovers
+    exactly the alias rows the salted join matched, duplicates
+    included."""
+    dim = aliases.select(F.col("alias").alias("surface"), "entity_id",
+                         "entity_type")
+    return ems.select("conv_id", "turn_idx", "sent_idx", "start", "end",
+                      "mention_key", "surface",
+                      F.explode("entity_ids").alias("entity_id")) \
+        .join(F.broadcast(dim), on=["surface", "entity_id"])

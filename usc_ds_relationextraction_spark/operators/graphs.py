@@ -26,12 +26,6 @@ from ..functions.hashing import h64
 NONE_LABEL = "None"
 
 
-def mention_dim(mentions: DataFrame, key_col: str = "mention_key") -> DataFrame:
-    """mention dimension: (mention_id, mention_key)."""
-    return mentions.select(
-        h64(F.col(key_col)).alias("mention_id"), F.col(key_col)).distinct()
-
-
 def mention_feature_graph(exploded_features: DataFrame) -> DataFrame:
     """(mention_key, feature) → (mention_id, feature_id, w=1).
 
@@ -80,11 +74,6 @@ def feature_type_graph(mention_feature: DataFrame, mention_type: DataFrame,
     )
 
 
-def degrees(graph: DataFrame, node_col: str) -> DataFrame:
-    """A4: weighted degree per node (negative-sampling distribution)."""
-    return graph.groupBy(node_col).agg(F.sum("w").alias("degree"))
-
-
 def rm_em_triples(rm_pairs: DataFrame) -> DataFrame:
     """J5: (em1_id, em2_id, rm_id) — the reference derives the two EM keys
     from the RM composite key (pruning_heuristics.py:109-122); our RM rows
@@ -94,16 +83,3 @@ def rm_em_triples(rm_pairs: DataFrame) -> DataFrame:
         h64("em2_key").alias("em2_id"),
         h64("mention_key").alias("rm_id"),
     )
-
-
-def supertype_pairs(type_vocab: DataFrame) -> DataFrame:
-    """A7: (subtype_id, supertype_id) from path-structured names
-    (statistic.py:30-50): /a/b is the supertype of /a/b/c."""
-    sub = type_vocab.select(F.col("type_id").alias("subtype_id"),
-                            F.col("name").alias("sub_name"))
-    sup = type_vocab.select(F.col("type_id").alias("supertype_id"),
-                            F.col("name").alias("sup_name"))
-    cond = (F.expr("sub_name like concat(sup_name, '/%')")
-            & (F.size(F.split("sub_name", "/"))
-               == F.size(F.split("sup_name", "/")) + 1))
-    return sub.join(F.broadcast(sup), cond).select("subtype_id", "supertype_id")

@@ -8,8 +8,11 @@ DS join (:mod:`.ds_label`) decides which candidates are entities.
 Two chunker implementations, tested for agreement:
 
  - :func:`np_chunks_col` — pure JVM higher-order functions (filter/
-   transform over the pos array).  Whole-stage-codegen, zero Python.
- - :func:`np_chunks_udf` — pandas/Arrow UDF (the north_star-named path).
+   transform over the pos array), zero Python.  The product path: over
+   2,500 conversations (103k candidates, 4 cores) its warm builds took
+   0.79-0.95 s against the UDF's 0.89-0.94 s, over 250 in a fresh JVM
+   the two tie within noise, and it starts no Python worker.
+ - :func:`np_chunks_udf` — pandas/Arrow UDF, its agreement twin.
 
 Candidate = maximal run of NNP tokens (proper-noun chunk).  At 100 TB the
 chunker is a narrow map over the sentence table — no shuffle; the only
@@ -23,8 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.tokenize import (pos_tags_col, split_sentences_udf,
-                                  tokenize_pos_udf, tokens_col)
+from ..functions.tokenize import pos_tags_col, sentences_udf, tokens_col
 
 CHUNK_SCHEMA = "array<struct<start: int, end: int, surface: string>>"
 
@@ -37,14 +39,15 @@ def sentences_table(turns: DataFrame, use_pandas_udfs: bool = True) -> DataFrame
     reference's (articleId, sentId) analog (input_hint W2 invariant).
     """
     if use_pandas_udfs:
+        # one Arrow pass per turn: split, tokenize and tag together
         sents = turns.select(
             "conv_id", "turn_idx", "role", "ts",
-            F.posexplode(split_sentences_udf()("text")).alias("sent_idx", "sentence"),
+            F.posexplode(sentences_udf()("text")).alias("sent_idx", "s"),
         )
-        tp = sents.withColumn("tp", tokenize_pos_udf()("sentence"))
-        return tp.select(
-            "conv_id", "turn_idx", "sent_idx", "role", "ts", "sentence",
-            F.col("tp.tokens").alias("tokens"), F.col("tp.pos").alias("pos"),
+        return sents.select(
+            "conv_id", "turn_idx", "sent_idx", "role", "ts",
+            F.col("s.sentence").alias("sentence"),
+            F.col("s.tokens").alias("tokens"), F.col("s.pos").alias("pos"),
         )
     # JVM fast path: whitespace tokens + expression tagger, sentence split
     # by regex lookbehind (pre-tokenized corpora only)
@@ -118,7 +121,8 @@ def np_chunks_udf():
     return _udf
 
 
-def candidates_table(sentences: DataFrame, use_pandas_udfs: bool = True) -> DataFrame:
+def candidates_table(sentences: DataFrame,
+                     use_pandas_udfs: bool = False) -> DataFrame:
     """Explode NP chunks to one row per candidate mention."""
     chunks = (np_chunks_udf()("tokens", "pos") if use_pandas_udfs
               else np_chunks_col("tokens", "pos"))

@@ -46,7 +46,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -179,12 +179,17 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
 
     Spark mechanics: each round is one join + one partial-aggregated
     groupBy min — no driver-side graph state, labels stay a distributed
-    (id, comp) table.  ``localCheckpoint(eager=True)`` truncates lineage
-    each round (an iterative plan otherwise grows by two joins per
-    round and re-executes from scratch at every convergence check).
-    Convergence is checked with a LIMIT 1 existence probe, not a full
-    count.  Raises if not converged within ``max_iter`` — silent
-    truncation would emit wrong components.
+    (id, comp) table.  The label frame is vertex-set sized (the KB's
+    entity vocabulary on the product path) and broadcast into the join,
+    and a vertex's own label rides the same groupBy as its neighbors'
+    labels, so a round runs one shuffle (at fixture scale every job is
+    mostly fixed cost).  ``localCheckpoint(eager=True)`` truncates
+    lineage each round (an iterative plan otherwise grows by a join and
+    an aggregation per round and re-executes from scratch at every
+    convergence check).  Convergence is counted by an ``Observation`` on
+    the checkpoint's own job, not by a probe job.  Raises if not
+    converged within ``max_iter`` — silent truncation would emit wrong
+    components.
 
     Only EDGE-INCIDENT vertices ride the rounds: an isolated vertex has
     no neighbor to read and no reader, so its label (itself) is final
@@ -205,7 +210,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     look round-dominated when it was actually upstream-recompute-
     dominated."""
     e = edges.select("src", "dst").localCheckpoint(eager=True)
-    incident = e.select(F.col("src").alias("entity_id")).distinct()
+    incident = F.broadcast(e.select(F.col("src").alias("entity_id"))
+                           .distinct())
     isolated = vertices.join(incident, on="entity_id", how="left_anti") \
         .select(F.col("entity_id").alias("id"),
                 F.col("entity_id").alias("comp"))
@@ -214,20 +220,23 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 F.col("entity_id").alias("comp"))
     lab = lab.localCheckpoint(eager=True)
     for _ in range(max_iter):
-        nb = e.join(lab.withColumnRenamed("id", "src"), on="src") \
-            .groupBy("dst").agg(F.min("comp").alias("nb_comp"))
-        # the changed flag rides the checkpointed frame, so convergence
-        # is a scan of already-materialized partitions — no second join
-        # of new-vs-old labels per round
-        new = lab.join(nb.withColumnRenamed("dst", "id"), on="id", how="left") \
-            .select("id",
-                    F.least("comp", F.coalesce("nb_comp", "comp"))
-                    .alias("comp"),
-                    (F.col("nb_comp") < F.col("comp")).alias("chg"))
-        new = new.localCheckpoint(eager=True)
-        changed = new.where("chg").limit(1).count()
-        lab = new.select("id", "comp")
-        if changed == 0:
+        nb = e.join(F.broadcast(lab.withColumnRenamed("id", "src")),
+                    on="src") \
+            .select(F.col("dst").alias("id"), "comp",
+                    F.lit(False).alias("own"))
+        # each labeled vertex's min over its own label (also kept as
+        # ``old``) and its neighbors'; the checkpoint's own job counts
+        # the labels that changed, so convergence costs no probe job
+        new = lab.select("id", "comp", F.lit(True).alias("own")) \
+            .unionByName(nb).groupBy("id") \
+            .agg(F.min("comp").alias("comp"),
+                 F.min(F.when(F.col("own"), F.col("comp"))).alias("old")) \
+            .where(F.col("old").isNotNull())
+        changed = Observation()
+        lab = new.observe(changed, F.sum((F.col("comp") < F.col("old"))
+                                         .cast("int")).alias("n")) \
+            .select("id", "comp").localCheckpoint(eager=True)
+        if not changed.get["n"]:
             return lab.unionAll(isolated) \
                 .select(F.col("id").alias("entity_id"),
                         F.col("comp").alias("component_id"))
@@ -271,24 +280,6 @@ def edges_by_component(edges: DataFrame,
                  F.col("obj_comp").alias("obj_id")) \
         .agg(F.sum("n_support").alias("n_support"),
              F.sum("n_convs").alias("n_convs"))
-
-
-def materialize_kg(wh, linked: DataFrame, labeled_pairs: DataFrame,
-                   aliases: DataFrame) -> dict[str, DataFrame]:
-    """Write the entity/edge tables through the warehouse (parquet or
-    Iceberg catalog — whatever the :class:`..sources.catalog.Warehouse`
-    is backed by), with the standard per-stage lineage metrics."""
-    nodes = wh.ensure("kg_entities",
-                      lambda: entity_nodes(linked, aliases),
-                      bucket_hint="entity_id")
-    edges = wh.ensure("kg_edges",
-                      lambda: canonical_edges(labeled_pairs, aliases),
-                      bucket_hint="subj_id")
-    comps = wh.ensure("kg_components",
-                      lambda: resolve_entities(aliases),
-                      bucket_hint="entity_id")
-    return {"kg_entities": nodes, "kg_edges": edges,
-            "kg_components": comps}
 
 
 # ----------------------------------------------------------- driver gate

@@ -6,22 +6,29 @@ Stage DAG over the warehouse (each stage checkpointed + metered):
        │                                         │                │
        └── (window W2 turn ordering) ── triples_ds (direct DS) ◄──┘
 
+``kg_tables`` reads stages of ``run``:
+
+  entity_mentions ─► kg_entities (explode entity_ids, ⋈ aliases)
+  rm_pairs ─► kg_edges;  aliases ─► kg_components
+
 The KB inputs (``aliases``, ``facts``) are pinned once per pipeline
-instance (``localCheckpoint``), lazily, inside the first stage build that
-reads them -- ``entity_mentions`` for the aliases, ``rm_pairs`` for the
-facts -- so every later build reads one materialized copy and a fully
-resumed run evaluates neither.
+instance (``sources.catalog.pin``: ``localCheckpoint``, read as one
+partition), lazily, inside the first stage build that reads them --
+``entity_mentions`` for the aliases, ``rm_pairs`` for the facts -- so
+every later build reads one materialized copy and a fully resumed run
+evaluates neither.
 
 Stages that do not depend on one another build concurrently, on threads
 that inherit the caller's Spark job group (``‖`` = concurrent):
 
   kg_tables:   kg_entities ‖ kg_edges ‖ kg_components
   run_graphs:  RM branch ‖ EM branch ‖ triples_mention, where a branch is
-               <ns>_feature_rows, then graph_tables(<ns>):
-                 <ns>_features ‖ <ns>_types ‖ <ns>_mention_type
-                   ‖ <ns>_mention_type_test
-                 then <ns>_mention_feature ‖ <ns>_mention_feature_test
-                 then <ns>_feature_type
+               <ns>_feature_rows, then graph_tables(<ns>): its seven
+               tables all at once, each build waiting only for the
+               tables it reads --
+                 <ns>_mention_feature(_test) after <ns>_features,
+                 <ns>_feature_type after <ns>_mention_feature and
+                 <ns>_mention_type
 
 ``triples_ds`` is the flagship output before any learning: every DS-labeled
 pair materializes as canonicalized (subj, pred, obj) edges — the reference's
@@ -44,7 +51,7 @@ from ..functions.features import (make_em_features_udf,
                                   make_rm_grouped_features_udf)
 from ..functions.hashing import h64
 from ..operators import ds_label, graphs, mentions, pairs as pairs_op, vocab
-from ..sources.catalog import Warehouse
+from ..sources.catalog import Warehouse, pin
 
 
 def _concurrently(spark: SparkSession, *builds):
@@ -57,6 +64,19 @@ def _concurrently(spark: SparkSession, *builds):
         futures = [pool.submit(inheritable_thread_target(spark)(b))
                    for b in builds]
         return [f.result() for f in futures]
+
+
+def _once(make):
+    """A thunk that calls ``make`` on its first call only, also when
+    several threads make that first call at once."""
+    lock, box = threading.Lock(), []
+
+    def get():
+        with lock:
+            if not box:
+                box.append(make())
+            return box[0]
+    return get
 
 
 class KGPipeline:
@@ -73,7 +93,7 @@ class KGPipeline:
         it only inside a stage build, so a resumed stage scans nothing."""
         with self._pin_lock:
             if df not in self._pinned:
-                self._pinned[df] = df.localCheckpoint(eager=True)
+                self._pinned[df] = pin(df)
             return self._pinned[df]
 
     # ------------------------------------------------------------- stages
@@ -134,8 +154,14 @@ class KGPipeline:
         """RM features F1-F12: join pairs back to sentence tokens/pos
         (sentence-key equi-join, dense key), extract, explode."""
         def build():
+            # hashed on the join key into every core's partition, so the
+            # UDF runs nproc-wide when the join broadcasts the pairs and
+            # streams this side (a small sentences table is one split);
+            # a shuffle join reuses this exchange (AQE keeps the count)
             sent = sentences.select("conv_id", "turn_idx", "sent_idx",
-                                    "tokens", "pos")
+                                    "tokens", "pos") \
+                .repartition(self.partitions, "conv_id", "turn_idx",
+                             "sent_idx")
             # one row per sentence: the grouped UDF ships/lemmatizes each
             # sentence once for all its pairs (the groupBy partitions on
             # the join key, so the join reuses that exchange)
@@ -179,38 +205,41 @@ class KGPipeline:
 
     def graph_tables(self, feature_rows: DataFrame,
                      prefix: str) -> dict[str, DataFrame]:
-        """Vocab + the three bipartite graphs + train/test variants."""
+        """Vocab + the three bipartite graphs + train/test variants.  The
+        seven tables build concurrently; a build that reads another of
+        them waits for that table only."""
         train = feature_rows.where(~F.col("is_test"))
         test = feature_rows.where(F.col("is_test"))
-        mentions_lab = feature_rows.select(
+        # read by three builds: computed once, by the first that needs it
+        mentions_lab = _once(lambda: feature_rows.select(
             "mention_key", "labels", "is_test").distinct()
+            .localCheckpoint(eager=True))
 
-        def ensure(table: str, build):
-            return lambda: self.wh.ensure(f"{prefix}_{table}", build)
+        def table(name: str, build):
+            return _once(lambda: self.wh.ensure(f"{prefix}_{name}", build))
 
-        voc, types, mt_train, mt_test = _concurrently(
-            self.spark,
-            ensure("features", lambda: vocab.build_vocab(train)),
-            ensure("types", lambda: vocab.build_type_vocab(
-                mentions_lab.where(~F.col("is_test"))
+        voc = table("features", lambda: vocab.build_vocab(train))
+        mt_train = table("mention_type", lambda: graphs.mention_type_graph(
+            mentions_lab().where(~F.col("is_test"))))
+        mf_train = table("mention_feature", lambda: (
+            graphs.mention_feature_graph(vocab.gate_to_vocab(train, voc()))))
+        tables = {
+            "features": voc,
+            "types": table("types", lambda: vocab.build_type_vocab(
+                mentions_lab().where(~F.col("is_test"))
                 .select("mention_key", F.explode("labels").alias("label")))),
-            ensure("mention_type", lambda: graphs.mention_type_graph(
-                mentions_lab.where(~F.col("is_test")))),
-            ensure("mention_type_test", lambda: graphs.mention_type_graph(
-                mentions_lab.where(F.col("is_test")))))
-        mf_train, mf_test = _concurrently(
-            self.spark,
-            ensure("mention_feature", lambda: graphs.mention_feature_graph(
-                vocab.gate_to_vocab(train, voc))),
-            ensure("mention_feature_test", lambda: graphs.mention_feature_graph(
-                vocab.gate_to_vocab(test, voc))))
-        ft = self.wh.ensure(
-            f"{prefix}_feature_type",
-            lambda: graphs.feature_type_graph(mf_train, mt_train))
-        return {"features": voc, "types": types,
-                "mention_feature": mf_train, "mention_feature_test": mf_test,
-                "mention_type": mt_train, "mention_type_test": mt_test,
-                "feature_type": ft}
+            "mention_feature": mf_train,
+            "mention_feature_test": table(
+                "mention_feature_test", lambda: graphs.mention_feature_graph(
+                    vocab.gate_to_vocab(test, voc()))),
+            "mention_type": mt_train,
+            "mention_type_test": table(
+                "mention_type_test", lambda: graphs.mention_type_graph(
+                    mentions_lab().where(F.col("is_test")))),
+            "feature_type": table("feature_type", lambda: (
+                graphs.feature_type_graph(mf_train(), mt_train()))),
+        }
+        return dict(zip(tables, _concurrently(self.spark, *tables.values())))
 
     def triples_mention(self, rm: DataFrame) -> DataFrame:
         return self.wh.ensure("triples_mention",
@@ -220,12 +249,13 @@ class KGPipeline:
                   facts: DataFrame) -> dict[str, DataFrame]:
         """Canonical entity/edge materialization (north_rule: "entity
         linking, canonicalization, graph materialize") — run after
-        :meth:`run`; reads the candidates + rm_pairs stages."""
+        :meth:`run`; reads the entity_mentions + rm_pairs stages."""
         from . import kg_materialize as kg
 
         def build_entities():
             al = self._kb(aliases)
-            linked = ds_label.link_entities(self.wh.read("candidates"), al)
+            linked = ds_label.linked_from_mentions(
+                self.wh.read("entity_mentions"), al)
             return kg.entity_nodes(linked, al)
 
         def build_edges():

@@ -32,6 +32,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def pin(small: DataFrame) -> DataFrame:
+    """A small input (a KB frame) evaluated once, now, and pinned: every
+    later read scans this copy instead of re-evaluating ``small``.  The
+    pin keeps ``small``'s partitions, so it evaluates them in parallel;
+    the pinned copy is read as one partition, so a broadcast or scan of
+    it is a single task."""
+    return small.localCheckpoint(eager=True).coalesce(1)
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
         self.spark = spark
@@ -40,6 +49,10 @@ class Warehouse:
         # stages build concurrently (KGPipeline); one lock keeps each
         # _metrics.jsonl record a whole line
         self._metrics_lock = threading.Lock()
+        # parquet schema of each table this instance wrote: reading it
+        # back with that schema skips the schema-inference job a plain
+        # read runs (one Spark job per read)
+        self._schemas: dict = {}
         os.makedirs(root, exist_ok=True)
 
     def path(self, name: str) -> str:
@@ -51,6 +64,9 @@ class Warehouse:
         return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
 
     def read(self, name: str) -> DataFrame:
+        if name in self._schemas:
+            return self.spark.read.schema(self._schemas[name]) \
+                .parquet(self.path(name))
         return self.spark.read.format(self.fmt).load(self.path(name))
 
     def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None,
@@ -63,10 +79,9 @@ class Warehouse:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(self.path(name))
-        # parquet reads back with the schema just written, which skips the
-        # schema-inference job a plain read runs
-        out = (self.spark.read.schema(df.schema).parquet(self.path(name))
-               if self.fmt == "parquet" else self.read(name))
+        if self.fmt == "parquet":
+            self._schemas[name] = df.schema
+        out = self.read(name)
         self._record(name, out, time.time() - t0, bucket_hint)
         return out
 

@@ -61,7 +61,6 @@ REL_BORN_IN = "/people/person/place_of_birth"
 REL_BASED_IN = "/business/company/place_founded"
 REL_SPOUSE = "/people/person/spouse"
 NONE_LABEL = "None"
-RELATIONS = [REL_WORKS_AT, REL_BORN_IN, REL_BASED_IN, REL_SPOUSE, NONE_LABEL]
 
 # sentence templates per pair-kind: (pre, mid, post, a_first)
 # tokens are space-delimited (terminal punctuation is its own token) so the
@@ -100,12 +99,6 @@ FILLER = [
     "let me check the records for you .",
 ]
 KIND_REL = {0: REL_WORKS_AT, 1: REL_BORN_IN, 2: REL_BASED_IN, 3: REL_SPOUSE}
-
-
-def entity_index_global(kind: int, within: int) -> int:
-    """(kind, within) -> global entity ordinal in [0, N_ENT)."""
-    base = {0: 0, 1: N_PERSON, 2: N_PERSON + N_ORG}[kind]
-    return base + within
 
 
 def entity_rows() -> list[tuple[str, str, str, int]]:

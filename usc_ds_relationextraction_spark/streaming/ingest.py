@@ -18,11 +18,12 @@ The KB lookup has two interchangeable implementations:
 Spark re-plans a stream-static join on every micro-batch, static side
 included, and the KB frames are ``createDataFrame(list)`` frames whose
 every evaluation starts Python-worker tasks.  So each stream builder
-pins its static KB side once, when the query is built (``_pinned``:
-``localCheckpoint(eager=True)``, as ``KGPipeline._kb`` does in batch,
-read back as one partition).  The broadcasts still run every
-micro-batch, but they read the pinned copy in one-task JVM-only jobs; a
-restart builds the query again and pins again, once.  The map-literal
+pins its static KB side once, when the query is built
+(``sources.catalog.pin``, which ``KGPipeline._kb`` uses in batch too:
+``localCheckpoint(eager=True)``, read back as one partition).  The
+broadcasts still run every micro-batch, but they read the pinned copy
+in one-task JVM-only jobs; a restart builds the query again and pins
+again, once.  The map-literal
 fallback collects the KB at build time and needs no pin.
 
 Equivalence with the batch path is tested: pairing is within
@@ -47,6 +48,7 @@ from ..functions.hof import let as _let
 from ..functions.tokenize import _tag_one, pos_tags_col, tokens_col
 from ..operators.mentions import np_chunks_col, np_chunks_py
 from ..sources import synthetic as syn
+from ..sources.catalog import pin
 
 TERMINALS = (".", "?", "!")
 _TERMINALS_SET = frozenset(TERMINALS)
@@ -113,15 +115,6 @@ def _terminal_positions(toks: str) -> Column:
         F.filter(F.sequence(F.lit(1), F.size(toks)),
                  lambda i: F.element_at(F.col(toks), i).isin(*TERMINALS))
     ).otherwise(F.array().cast("array<int>"))
-
-
-def _pinned(kb: DataFrame) -> DataFrame:
-    """The static KB side of a stream query, evaluated once, now, and
-    pinned for the query's life: every micro-batch's broadcast reads this
-    copy instead of re-evaluating ``kb``.  The pin keeps ``kb``'s
-    partitions, so it evaluates them in parallel; the pinned copy is read
-    as one partition, so each broadcast is a single task."""
-    return kb.localCheckpoint(eager=True).coalesce(1)
 
 
 def _alias_map(spark: SparkSession) -> Column:
@@ -278,8 +271,8 @@ def stream_triples(spark: SparkSession, source_dir: str,
               .load(source_dir))
     if kb_join:
         triples = turn_local_triples_join(stream,
-                                          _pinned(syn.kb_aliases(spark)),
-                                          _pinned(syn.kb_facts(spark)))
+                                          pin(syn.kb_aliases(spark)),
+                                          pin(syn.kb_facts(spark)))
     else:
         # map-literal fallback: join-free plan, fine for fixture-sized KBs
         triples = turn_local_triples(stream, _alias_map(spark),
@@ -331,8 +324,8 @@ def stream_windowed_counts(spark: SparkSession, source_dir: str,
     watermark finalizes them)."""
     stream = (spark.readStream.schema(schema).format("parquet")
               .load(source_dir))
-    triples = turn_local_triples_join(stream, _pinned(syn.kb_aliases(spark)),
-                                      _pinned(syn.kb_facts(spark)))
+    triples = turn_local_triples_join(stream, pin(syn.kb_aliases(spark)),
+                                      pin(syn.kb_facts(spark)))
     agg = windowed_triple_counts(triples, window, watermark)
     return (agg.writeStream.format("memory").queryName(query_name)
             .outputMode("complete").trigger(availableNow=True).start())
@@ -408,7 +401,7 @@ def stream_entity_updates(spark: SparkSession, source_dir: str,
         .withColumn("chunk", F.explode(np_chunks_col("toks", "pos"))) \
         .select("conv_id", "turn_idx",
                 F.col("chunk.surface").alias("surface"))
-    al = _pinned(syn.kb_aliases(spark).select(
+    al = pin(syn.kb_aliases(spark).select(
         F.col("alias").alias("surface"), "entity_id").distinct())
     linked = t.join(F.broadcast(al), on="surface") \
         .select("conv_id", "turn_idx", "entity_id")
@@ -445,8 +438,8 @@ def stream_kg_edges(spark: SparkSession, source_dir: str,
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
               .load(source_dir))
     evidence = turn_local_triples_join(
-        stream, _pinned(syn.kb_aliases(spark)),
-        _pinned(syn.kb_facts(spark))) \
+        stream, pin(syn.kb_aliases(spark)),
+        pin(syn.kb_facts(spark))) \
         .select("subj", "pred", "obj", F.lit(1).alias("n_support"))
     sink = incremental_agg_sink(spark, target,
                                 key_cols=["subj", "pred", "obj"],
@@ -481,7 +474,7 @@ def stream_kg_nodes(spark: SparkSession, source_dir: str,
         .withColumn("pos", pos_tags_col("toks")) \
         .withColumn("chunk", F.explode(np_chunks_col("toks", "pos"))) \
         .select(F.col("chunk.surface").alias("surface"))
-    al = _pinned(syn.kb_aliases(spark).select(
+    al = pin(syn.kb_aliases(spark).select(
         F.col("alias").alias("surface"), "entity_id", "entity_type")
         .dropDuplicates(["surface", "entity_id"]))
     evidence = t.join(F.broadcast(al), on="surface") \
