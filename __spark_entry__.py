@@ -5,6 +5,14 @@
 (plus the training-data-pipeline family); ``oracle_sql()`` gives each a
 DuckDB twin over the same parquet inputs.
 
+The distant-supervision front-end queries (``p1_tokenize``,
+``np_chunk_mentions``, ``j1_entity_linking``, ``p4_pair_generation``,
+``ds_label_pairs``, ``triples_ds``, ``so1_label_union``,
+``a2_mention_histogram``) and the helpers other plans reuse
+(``_mentions_df``, ``_linked_df``, ``_pairs_df``, ``_labeled_pairs_df``)
+project the operators ``KGPipeline`` runs, so their oracles check the
+product's sentences, candidates, alias link, pairs and fact labels.
+
 Engine-parity rules used throughout (see
 usc_ds_relationextraction_spark/functions/hashing.py):
  - portable 60-bit hash: Spark ``conv(substring(md5(x),1,15),16,10)``
@@ -22,17 +30,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from usc_ds_relationextraction_spark.functions.hashing import h64, h64_duckdb
 from usc_ds_relationextraction_spark.functions.tokenize import (POS_DICT,
                                                                 pos_tags_col,
                                                                 tokens_col)
-from usc_ds_relationextraction_spark.operators.mentions import np_chunks_col
-from usc_ds_relationextraction_spark.operators.skew import adaptive_dim_join
+from usc_ds_relationextraction_spark.operators import ds_label, mentions
+from usc_ds_relationextraction_spark.operators import pairs as pairs_op
 from usc_ds_relationextraction_spark.sources import synthetic as syn
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 FX01 = os.path.join(REPO, ".fixtures", "sf0.01")  # oracle side is sf0.01
-TERMINALS = (".", "?", "!")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -50,95 +56,84 @@ def _fx_sql(name: str) -> str:
 
 # ---------------------------------------------------------------- pipeline
 def _turn_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """turn-level whitespace tokens + rule POS (JVM fast path)."""
+    """turn-level whitespace tokens + rule POS (JVM fast path) for the
+    feature-parity queries that slice a turn by turn-level offsets."""
     t = _fx(spark, sf_dir, "transcripts")
     return t.withColumn("toks", tokens_col("text")) \
         .withColumn("pos", pos_tags_col("toks"))
 
 
+# The front-end helpers below project the operators KGPipeline runs
+# (operators/{mentions,ds_label,pairs}).  Their one contract-side step
+# moves token offsets from the sentence to the turn, the unit the oracles
+# count in; ``sent_id`` is the product's ``sent_idx``.
+
+def _sentences_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``mentions.sentences_table`` plus ``off``: the turn-level offset of
+    the sentence's first token (the token count of the turn's earlier
+    sentences)."""
+    from pyspark.sql import Window
+    before = Window.partitionBy("conv_id", "turn_idx").orderBy("sent_idx") \
+        .rowsBetween(Window.unboundedPreceding, -1)
+    s = mentions.sentences_table(_fx(spark, sf_dir, "transcripts"))
+    return s.withColumn("off", F.coalesce(
+        F.sum(F.size("tokens")).over(before), F.lit(0)).cast("int"))
+
+
+def _candidates_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``mentions.candidates_table`` with turn-level start/end."""
+    s = _sentences_df(spark, sf_dir)
+    keys = ["conv_id", "turn_idx", "sent_idx"]
+    c = mentions.candidates_table(s).join(s.select(*keys, "off"), keys)
+    return c.withColumn("start", F.col("start") + F.col("off")) \
+        .withColumn("end", F.col("end") + F.col("off"))
+
+
+def _linked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ds_label.link_entities`` over the turn-level candidates."""
+    aliases = _fx(spark, sf_dir, "kb_aliases") \
+        .select("alias", "entity_id", "entity_type").distinct()
+    return ds_label.link_entities(_candidates_df(spark, sf_dir), aliases)
+
+
+def _rm_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``pairs.rm_candidates`` over ``ds_label.entity_mentions``."""
+    return pairs_op.rm_candidates(
+        ds_label.entity_mentions(_linked(spark, sf_dir)))
+
+
 def _mentions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NNP-run candidates at turn level + sentence id + alias link."""
-    tt = _turn_tokens(spark, sf_dir)
-    cand = tt.withColumn("chunk", F.explode(np_chunks_col("toks", "pos"))) \
-        .select("conv_id", "turn_idx", "toks",
-                F.col("chunk.start").alias("start"),
-                F.col("chunk.end").alias("end"),
-                F.col("chunk.surface").alias("surface"))
-    # sentence id = #terminal tokens strictly before the mention start
-    cand = cand.withColumn(
-        "sent_id",
-        F.size(F.filter(F.slice("toks", 1, F.col("start")),
-                        lambda x: x.isin(*TERMINALS))).cast("int"))
-    return cand.drop("toks")
+    """NNP-run candidates: turn-level offsets + sentence id."""
+    return _candidates_df(spark, sf_dir).select(
+        "conv_id", "turn_idx", "start", "end", "surface",
+        F.col("sent_idx").alias("sent_id"))
 
 
 def _linked_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cand = _mentions_df(spark, sf_dir)
-    # dedup the 100-row DIMENSION, not the joined fact table: candidates
-    # are unique per (turn, start) by construction, so with a distinct
-    # alias dim the join output is already unique per (span, entity) —
-    # same rows as the old post-join .distinct() minus its full shuffle
-    # of the mention table (the thing that doesn't scale at 10^12 turns)
-    al = _fx(spark, sf_dir, "kb_aliases") \
-        .select(F.col("alias").alias("surface"), "entity_id",
-                "entity_type").distinct()
-    # strategy is self-selecting (adaptive_dim_join's docstring has the
-    # measurement): the alias dim broadcasts when it fits, falls back to
-    # AQE skew-join, and salts only when neither applies — never the ×S
-    # replication tax by default
-    linked = adaptive_dim_join(cand, al, on=["surface"], n_salts=8,
-                               big_unique=F.concat_ws(
-                                   "_", "conv_id", "turn_idx", "start",
-                                   "end"))
-    return linked.select("conv_id", "turn_idx", "sent_id", "start", "end",
-                         "surface", "entity_id", "entity_type")
+    """One row per (candidate, linked alias entity)."""
+    return _linked(spark, sf_dir).select(
+        "conv_id", "turn_idx", F.col("sent_idx").alias("sent_id"), "start",
+        "end", "surface", "entity_id", "entity_type")
 
 
 def _pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    ems = _linked_df(spark, sf_dir)
-    # span ordinal within the sentence: dense_rank over the per-entity
-    # rows collapses same-start duplicates (one chunk per start by
-    # construction) to one rank — equivalent to rank() over DISTINCT
-    # spans, but evaluates the expensive linked-mentions subtree ONCE
-    # instead of twice (no spans.distinct + join-back).  The DuckDB
-    # oracle keeps the distinct-spans formulation: two independent
-    # derivations agreeing is the stronger check.
-    w = Window.partitionBy("conv_id", "turn_idx", "sent_id").orderBy("start")
-    e = ems.withColumn("em_rank", F.dense_rank().over(w))
-    a = e.select("conv_id", "turn_idx", "sent_id",
-                 F.col("start").alias("em1_start"),
-                 F.col("end").alias("em1_end"),
-                 F.col("surface").alias("em1_text"),
-                 F.col("entity_id").alias("em1_entity"),
-                 F.col("em_rank").alias("r1"))
-    b = e.select("conv_id", "turn_idx", "sent_id",
-                 F.col("start").alias("em2_start"),
-                 F.col("end").alias("em2_end"),
-                 F.col("surface").alias("em2_text"),
-                 F.col("entity_id").alias("em2_entity"),
-                 F.col("em_rank").alias("r2"))
-    p = a.join(b, on=["conv_id", "turn_idx", "sent_id"]) \
-        .where(F.col("em1_start") < F.col("em2_start"))
-    return p.withColumn("num_between",
-                        (F.col("r2") - F.col("r1") - 1).cast("int")) \
-        .drop("r1", "r2")
+    """One row per (mention pair, em1 entity, em2 entity)."""
+    p = pairs_op.entity_pairs(_rm_df(spark, sf_dir))
+    return p.select("conv_id", "turn_idx", F.col("sent_idx").alias("sent_id"),
+                    F.col("em1Start").alias("em1_start"),
+                    F.col("em1End").alias("em1_end"),
+                    F.col("em1Text").alias("em1_text"), "em1_entity",
+                    F.col("em2Start").alias("em2_start"),
+                    F.col("em2End").alias("em2_end"),
+                    F.col("em2Text").alias("em2_text"), "em2_entity",
+                    F.col("numOfEMBetween").alias("num_between"))
 
 
 def _labeled_pairs_df(spark: SparkSession, sf_dir: str,
                       pairs: DataFrame | None = None) -> DataFrame:
-    # union the (small) fact dimension into both directions and join ONCE:
-    # a union of two joins would evaluate the whole pair subtree twice
+    """``_pairs_df`` rows ⋈ KB facts: one row per (pair, fact, direction)."""
     p = pairs if pairs is not None else _pairs_df(spark, sf_dir)
-    facts = _fx(spark, sf_dir, "kb_facts")
-    both = facts.select(F.col("subj_id").alias("em1_entity"),
-                        F.col("obj_id").alias("em2_entity"),
-                        "relation", F.lit("fwd").alias("direction")) \
-        .unionByName(facts.select(
-            F.col("obj_id").alias("em1_entity"),
-            F.col("subj_id").alias("em2_entity"),
-            "relation", F.lit("rev").alias("direction")))
-    return p.join(F.broadcast(both), on=["em1_entity", "em2_entity"])
+    return pairs_op.fact_rows(p, _fx(spark, sf_dir, "kb_facts"))
 
 
 # SQL building blocks shared by the pipeline oracles
@@ -256,12 +251,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Q["w2_turn_ordering"] = w2_turn_ordering
 
     def p1_tokenize(spark, sf):
-        tt = _turn_tokens(spark, sf)
-        return tt.select(
-            "conv_id", "turn_idx",
-            F.posexplode("toks").alias("pos0", "token")
+        s = _sentences_df(spark, sf)
+        return s.select(
+            "conv_id", "turn_idx", "off",
+            F.posexplode("tokens").alias("pos0", "token")
         ).select("conv_id", "turn_idx",
-                 (F.col("pos0") + 1).cast("int").alias("pos"), "token")
+                 (F.col("off") + F.col("pos0") + 1).cast("int").alias("pos"),
+                 "token")
     Q["p1_tokenize"] = p1_tokenize
 
     def np_chunk_mentions(spark, sf):
@@ -283,14 +279,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Q["ds_label_pairs"] = ds_label_pairs
 
     def triples_ds(spark, sf):
-        lp = _labeled_pairs_df(spark, sf)
-        return lp.select(
-            F.when(F.col("direction") == "fwd", F.col("em1_text"))
-             .otherwise(F.col("em2_text")).alias("subj"),
-            F.col("relation").alias("pred"),
-            F.when(F.col("direction") == "fwd", F.col("em2_text"))
-             .otherwise(F.col("em1_text")).alias("obj"),
-            "conv_id", "turn_idx").distinct()
+        lp = pairs_op.label_pairs(_rm_df(spark, sf),
+                                  _fx(spark, sf, "kb_facts"))
+        return pairs_op.ds_triples(lp).select(
+            "subj", "pred", "obj", "conv_id", "turn_idx").distinct()
     Q["triples_ds"] = triples_ds
 
     def so1_label_union(spark, sf):
@@ -498,17 +490,6 @@ _DEPRIORITIZED = [
     "p3_span_alignment", "a5_cumulative_table", "j7_centroid_assign",
     "dedup_substring_spans",
 ]
-# round-4 curation deltas: dedup_minhash un-deprioritized (Arrow-bank
-# rewrite — its 8 signature columns hash the new kernel directly) with
-# mm_decode_features dropped to the tail in its place (the real-decode
-# twin mm_decode_real leads; the stub variant is the weaker check).
-# p3_span_alignment STAYS in the tail although its implementation
-# changed: the in-window p3_span_alignment_all hashes every occurrence
-# from the same fused hit table, strictly superseding the first-hit
-# projection.  Likewise dedup_substring_spans (all-pairs tier) yields
-# the window slot to dedup_substring_spans_lsh, which runs the identical
-# runs logic PLUS the candidates bound (the 100 TB shape).
-
 
 # Names guaranteed a slot in the driver's 50-query snapshot: this round's
 # new gate entries plus the training-epoch and kg_* families.

@@ -1,10 +1,12 @@
-"""Driver-contract invariants: queries()/oracle_sql() stay aligned, and
-the generated DuckDB rule twins (POS tagger, lemmatizer) agree with the
+"""Driver-contract invariants: queries()/oracle_sql() stay aligned, the
+distant-supervision front-end queries equal their DuckDB oracles, and the
+generated DuckDB rule twins (POS tagger, lemmatizer) agree with the
 Python implementations on a broad deterministic token sample."""
 
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 import __spark_entry__ as entry
 from usc_ds_relationextraction_spark.functions.lemma import get_lemma
@@ -12,6 +14,7 @@ from usc_ds_relationextraction_spark.functions.tokenize import _tag_one
 from usc_ds_relationextraction_spark.plans.parity_queries import (
     _sql_lems, _sql_pos_tag, _sql_word_shape)
 from usc_ds_relationextraction_spark.functions.features import word_shape
+from scripts.check_oracles import SF_DIR, table_digest
 
 TOKENS = [
     "Alice", "Smith", "works", "worked", "working", "runs", "running",
@@ -33,6 +36,27 @@ def test_query_oracle_keys_align():
     # (_curated skips unknown names, so a stale entry would go unnoticed)
     stale = (set(entry._LEAD) | set(entry._DEPRIORITIZED)) - set(q)
     assert not stale, f"ordering names without queries: {stale}"
+
+
+# the queries that project KGPipeline's front-end operators (sentences,
+# candidates, alias link, pairs, fact labels)
+FRONT_END = [
+    "p1_tokenize", "np_chunk_mentions", "j1_entity_linking",
+    "p4_pair_generation", "ds_label_pairs", "triples_ds", "so1_label_union",
+    "a2_mention_histogram",
+]
+
+
+@pytest.mark.parametrize("name", FRONT_END)
+def test_front_end_query_equals_oracle(spark, name):
+    """The value-hash gate of ``scripts/check_oracles.py`` on one query."""
+    df = entry.queries()[name](spark, SF_DIR)
+    got = table_digest(df.columns, [tuple(r) for r in df.collect()])
+    res = duckdb.connect().execute(entry.oracle_sql()[name])
+    cols = [d[0] for d in res.description]
+    assert sorted(df.columns) == sorted(cols)
+    assert got == table_digest(cols, res.fetchall())
+    assert got[0] > 0
 
 
 def test_sql_pos_tagger_agrees_with_python():

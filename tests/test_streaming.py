@@ -3,8 +3,6 @@ pipeline's triples on the same corpus, end to end through readStream."""
 
 from __future__ import annotations
 
-import os
-
 from usc_ds_relationextraction_spark.sources import synthetic as syn
 from usc_ds_relationextraction_spark.streaming import ingest
 
@@ -16,26 +14,16 @@ def test_turn_local_equals_batch(spark, tiny_corpus):
            ingest.turn_local_triples(tiny_corpus, am, fm)
            .select("subj", "pred", "obj", "conv_id", "turn_idx")
            .distinct().collect()}
-    # batch path: __spark_entry__ triples_ds over the same rows
-    from usc_ds_relationextraction_spark.plans.pipeline import KGPipeline
-    import tempfile
-    import __spark_entry__ as em
-    # reuse the query-level labeled pairs on an ad-hoc fixture: write the
-    # corpus where _fx expects it
+    # batch path: the operators KGPipeline runs, with their defaults
     from usc_ds_relationextraction_spark.operators import ds_label, mentions, pairs
-    s = mentions.sentences_table(tiny_corpus, use_pandas_udfs=False)
-    c = mentions.candidates_table(s, use_pandas_udfs=False)
+    s = mentions.sentences_table(tiny_corpus)
+    c = mentions.candidates_table(s)
     e = ds_label.entity_mentions(
         ds_label.link_entities(c, syn.kb_aliases(spark)))
     r = pairs.label_pairs(pairs.rm_candidates(e), syn.kb_facts(spark))
-    from pyspark.sql import functions as F
-    fwd = r.select(F.col("em1Text").alias("subj"),
-                   F.explode("labels_fwd").alias("pred"),
-                   F.col("em2Text").alias("obj"), "conv_id", "turn_idx")
-    rev = r.select(F.col("em2Text").alias("subj"),
-                   F.explode("labels_rev").alias("pred"),
-                   F.col("em1Text").alias("obj"), "conv_id", "turn_idx")
-    want = {tuple(x) for x in fwd.unionByName(rev).distinct().collect()}
+    want = {tuple(x) for x in pairs.ds_triples(r)
+            .select("subj", "pred", "obj", "conv_id", "turn_idx")
+            .distinct().collect()}
     assert got == want and len(got) > 0
 
 

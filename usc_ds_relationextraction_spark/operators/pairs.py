@@ -6,6 +6,9 @@ supervision labels it by joining (subj_entity, obj_entity) against
 ``kb_facts`` in both directions, unioning relation labels per pair
 (label-set union, nlp_parse.py:138-141 analog); pairs with no fact get
 label ``None`` (the reference's negative type, evaluation.py:5-12).
+:func:`ds_triples` turns the labeled pairs into direct-DS triples;
+:func:`entity_pairs` + :func:`fact_rows` keep the per-(entity pair, fact)
+evidence that the label-set collapse drops, for the canonical edge table.
 
 ``numOfEMBetween`` (P5): rank of EM start offsets within the sentence via
 a window over (conv_id, turn_idx, sent_idx) — rank distance minus one
@@ -105,3 +108,50 @@ def label_pairs(pairs: DataFrame, facts: DataFrame) -> DataFrame:
         .withColumn("labels_rev",
                     F.coalesce(F.col("labels_rev"), F.array().cast("array<string>")))
     )
+
+
+def ds_triples(labeled: DataFrame) -> DataFrame:
+    """Direct distant-supervision triples from :func:`label_pairs` output:
+    one row per (pair, relation label), in fact direction -- a forward
+    label keeps textual order, a reverse label swaps subj and obj."""
+    fwd = labeled.select(
+        F.col("em1Text").alias("subj"),
+        F.explode("labels_fwd").alias("pred"),
+        F.col("em2Text").alias("obj"),
+        "conv_id", "turn_idx", "mention_key",
+    )
+    rev = labeled.select(
+        F.col("em2Text").alias("subj"),
+        F.explode("labels_rev").alias("pred"),
+        F.col("em1Text").alias("obj"),
+        "conv_id", "turn_idx", "mention_key",
+    )
+    return fwd.unionByName(rev)
+
+
+def entity_pairs(pairs: DataFrame) -> DataFrame:
+    """One row per (pair, em1 entity, em2 entity): the ``em1_entities`` ×
+    ``em2_entities`` label sets of :func:`rm_candidates` exploded to
+    ``em1_entity``/``em2_entity``; every other column is kept."""
+    keep = [c for c in pairs.columns
+            if c not in ("em1_entities", "em2_entities")]
+    return (pairs
+            .select(*keep, F.explode("em1_entities").alias("em1_entity"),
+                    "em2_entities")
+            .select(*keep, "em1_entity",
+                    F.explode("em2_entities").alias("em2_entity")))
+
+
+def fact_rows(ents: DataFrame, facts: DataFrame) -> DataFrame:
+    """Entity pairs (``em1_entity``, ``em2_entity``) ⋈ the KB facts in both
+    directions: one row per (entity pair, matching fact) with its
+    ``relation`` and ``direction`` ("fwd" when em1 is the fact's subject,
+    "rev" when em2 is).  The fwd ∪ rev fact table is a dimension and is
+    broadcast, so the pair side is joined once and never shuffled."""
+    both = facts.select(F.col("subj_id").alias("em1_entity"),
+                        F.col("obj_id").alias("em2_entity"), "relation",
+                        F.lit("fwd").alias("direction")) \
+        .unionByName(facts.select(F.col("obj_id").alias("em1_entity"),
+                                  F.col("subj_id").alias("em2_entity"),
+                                  "relation", F.lit("rev").alias("direction")))
+    return ents.join(F.broadcast(both), on=["em1_entity", "em2_entity"])

@@ -33,69 +33,6 @@ def explode_salts(df: DataFrame, n_salts: int) -> DataFrame:
     ).withColumn(SALT_COL, F.col(SALT_COL).cast("int"))
 
 
-# Above this many dimension rows we stop considering a driver-side
-# broadcast (conservative: a 2M-row alias dim ~ a few hundred MB on the
-# driver; real clusters set spark.sql.autoBroadcastJoinThreshold, this is
-# the explicit analog for the strategy chooser).
-BROADCAST_ROW_LIMIT = 2_000_000
-
-# (plan-hash, limit) -> probed row count; lives for the driver process
-_PROBE_CACHE: dict = {}
-
-
-def adaptive_dim_join(
-    big: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    how: str = "inner",
-    n_salts: int = 8,
-    big_unique: Column | None = None,
-    broadcast_row_limit: int = BROADCAST_ROW_LIMIT,
-) -> DataFrame:
-    """Fact ⋈ dimension with a self-selecting physical strategy.
-
-    Encodes the conclusion of the skew bench (AQE skew-join 1.52s vs
-    unconditional salting 5.13s at the same scale): salting is
-    the ESCALATION, not the default.
-
-      1. dimension fits the broadcast limit  → broadcast hash join
-         (no shuffle of the fact side at all — the 10^12-turn shape);
-      2. dimension too big, AQE enabled      → plain shuffle equi-join;
-         AQE splits any skewed partitions at runtime;
-      3. dimension too big, AQE disabled     → deterministic salted join
-         (the only case where we pay the ×S dim replication).
-
-    The dim-size probe is a bounded job: ``limit(N+1).count()`` scans at
-    most N+1 rows whatever the dimension's true size — and is memoized
-    per analyzed plan, so rebuilding the same query pays it once per
-    process, not once per join construction.  CAVEATS: (a) the probe is
-    bounded only when the dimension is a scan/filter chain — a limit
-    ABOVE an aggregation still executes the full aggregation, so don't
-    route aggregate-built dims through here (token_rarity's frequency
-    table uses a plain join + AQE dynamic selection instead); (b)
-    ``big_unique`` is required if escalation to the salted join (case 3)
-    is reachable — see :func:`salted_join`.
-    """
-    try:
-        key = (dim._jdf.queryExecution().analyzed().semanticHash(),
-               broadcast_row_limit)
-    except Exception:
-        key = (str(dim._jdf.queryExecution().analyzed()),
-               broadcast_row_limit)
-    probe = _PROBE_CACHE.get(key)
-    if probe is None:
-        probe = dim.limit(broadcast_row_limit + 1).count()
-        _PROBE_CACHE[key] = probe
-    if probe <= broadcast_row_limit:
-        return big.join(F.broadcast(dim), on=on, how=how)
-    aqe = str(big.sparkSession.conf.get(
-        "spark.sql.adaptive.enabled", "true")).lower() == "true"
-    if aqe:
-        return big.join(dim, on=on, how=how)
-    return salted_join(big, dim, on=on, how=how, n_salts=n_salts,
-                       big_unique=big_unique, broadcast_small=False)
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

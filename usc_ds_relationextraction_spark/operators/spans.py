@@ -40,6 +40,10 @@ from pyspark.sql.functions import pandas_udf
 
 HITS_SCHEMA = "array<struct<alias: string, hits: array<int>>>"
 
+# Above this many distinct aliases the broadcast scan is not considered (a
+# 2M-row alias dim is a few hundred MB on the driver).
+BROADCAST_ROW_LIMIT = 2_000_000
+
 
 def _tok_ws(s: str) -> list[str]:
     """Python twin of ``tokenize.tokens_col`` (split on ' ', drop '')."""
@@ -94,7 +98,6 @@ def align_spans_broadcast(turns: DataFrame, alias_df: DataFrame,
     :func:`align_spans`, which probes the dimension (bounded job) and
     falls over to :func:`align_spans_sharded` above the broadcast limit.
     """
-    from .skew import BROADCAST_ROW_LIMIT
     # fail fast instead of OOMing the driver on a non-dictionary-scale
     # dimension: probe with a bounded limit(N+1).count() FIRST — a
     # count ships one long back to the driver however big the dim is,
@@ -191,9 +194,9 @@ def align_spans_sharded(turns: DataFrame, alias_df: DataFrame,
                 .alias("hits")))
 
 
-# Same driver-process memo pattern as skew.adaptive_dim_join: probing the
-# alias dimension is a bounded job (limit(N+1).count() scans ≤ N+1 rows),
-# paid once per analyzed plan, not once per align_spans construction.
+# Driver-process memo: probing the alias dimension is a bounded job
+# (limit(N+1).count() scans ≤ N+1 rows), paid once per analyzed plan, not
+# once per align_spans construction.
 _SPAN_PROBE_CACHE: dict = {}
 
 
@@ -201,9 +204,8 @@ def align_spans(turns: DataFrame, alias_df: DataFrame,
                 toks_col: str = "toks",
                 alias_col: str = "alias",
                 broadcast_row_limit: int | None = None) -> DataFrame:
-    """Self-selecting P3 span alignment (the J1 ``adaptive_dim_join``
-    pattern applied to the scan): dictionary-scale alias dims take the
-    broadcast fused Arrow scan (narrow map, no shuffle); above the
+    """Self-selecting P3 span alignment: dictionary-scale alias dims take
+    the broadcast fused Arrow scan (narrow map, no shuffle); above the
     broadcast limit the sharded first-token-index join takes over, so a
     non-dictionary-scale alias_df can no longer OOM the driver — the
     probe reads at most limit+1 rows whatever the dimension's true size.
@@ -211,7 +213,6 @@ def align_spans(turns: DataFrame, alias_df: DataFrame,
     ``tests/test_spans.py`` asserts broadcast ≡ sharded row-for-row and
     that the chooser picks each side at the intended sizes.
     """
-    from .skew import BROADCAST_ROW_LIMIT
     if broadcast_row_limit is None:
         broadcast_row_limit = BROADCAST_ROW_LIMIT
     try:

@@ -49,6 +49,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import pairs as pairs_op
+
 
 def _entry():
     import __spark_entry__ as entry
@@ -83,8 +85,9 @@ def entity_nodes(linked: DataFrame, aliases: DataFrame) -> DataFrame:
 def canonical_edges(labeled_pairs: DataFrame,
                     aliases: DataFrame | None = None) -> DataFrame:
     """KG edge table from DS-labeled pairs (the
-    ``_labeled_pairs_df`` shape: em1/em2 entity ids + relation +
-    direction).  Canonical orientation: fact order, not textual order."""
+    :func:`..operators.pairs.fact_rows` shape: em1/em2 entity ids +
+    relation + direction).  Canonical orientation: fact order, not
+    textual order."""
     fwd = F.col("direction") == "fwd"
     edges = labeled_pairs.select(
         F.when(fwd, F.col("em1_entity")).otherwise(F.col("em2_entity"))
@@ -114,30 +117,14 @@ def canonical_edges(labeled_pairs: DataFrame,
 def canonical_edges_from_pairs(pairs: DataFrame, facts: DataFrame,
                                aliases: DataFrame | None = None) -> DataFrame:
     """Canonical edges from the :mod:`..operators.pairs` labeled-pair
-    shape (``em1_entities``/``em2_entities`` label-set arrays): re-derive
-    the per-(pair, fact) evidence rows — the label-set collapse in
-    ``label_pairs`` drops which entity pair supplied which relation, so
-    the edge table goes back to the explode×broadcast-facts join (the
-    same plan shape, one broadcast, no extra shuffle before the final
-    groupBy)."""
-    ents = (pairs
-            .select("mention_key", "conv_id",
-                    F.explode("em1_entities").alias("e1"), "em2_entities")
-            .select("mention_key", "conv_id", "e1",
-                    F.explode("em2_entities").alias("e2")))
-    both = facts.select(F.col("subj_id").alias("e1"),
-                        F.col("obj_id").alias("e2"), "relation",
-                        F.lit("fwd").alias("direction")) \
-        .unionByName(facts.select(F.col("obj_id").alias("e1"),
-                                  F.col("subj_id").alias("e2"), "relation",
-                                  F.lit("rev").alias("direction")))
-    ev = ents.join(F.broadcast(both), on=["e1", "e2"])
-    fwd = F.col("direction") == "fwd"
-    labeled = ev.select(
-        F.when(fwd, F.col("e1")).otherwise(F.col("e2")).alias("em1_entity"),
-        F.when(fwd, F.col("e2")).otherwise(F.col("e1")).alias("em2_entity"),
-        "relation", F.lit("fwd").alias("direction"), "conv_id")
-    return canonical_edges(labeled, aliases)
+    shape (``em1_entities``/``em2_entities`` label-set arrays): the
+    label-set collapse in ``label_pairs`` drops which entity pair supplied
+    which relation, so the per-(pair, fact) evidence rows are re-derived
+    by ``entity_pairs`` + ``fact_rows`` (explode × broadcast facts, no
+    extra shuffle before the final groupBy)."""
+    ents = pairs_op.entity_pairs(
+        pairs.select("conv_id", "em1_entities", "em2_entities"))
+    return canonical_edges(pairs_op.fact_rows(ents, facts), aliases)
 
 
 def alias_blocking_edges(aliases: DataFrame, min_df: int = 2,

@@ -126,21 +126,8 @@ class KGPipeline:
     def triples_ds(self, rm: DataFrame) -> DataFrame:
         """Direct distant-supervision triples (no learning): one edge per
         (pair, relation label) with fact direction applied."""
-        def build():
-            fwd = rm.select(
-                F.col("em1Text").alias("subj"),
-                F.explode("labels_fwd").alias("pred"),
-                F.col("em2Text").alias("obj"),
-                "conv_id", "turn_idx", "mention_key",
-            )
-            rev = rm.select(
-                F.col("em2Text").alias("subj"),
-                F.explode("labels_rev").alias("pred"),
-                F.col("em1Text").alias("obj"),
-                "conv_id", "turn_idx", "mention_key",
-            )
-            return fwd.unionByName(rev)
-        return self.wh.ensure("triples_ds", build, bucket_hint="conv_id")
+        return self.wh.ensure("triples_ds", lambda: pairs_op.ds_triples(rm),
+                              bucket_hint="conv_id")
 
     # --------------------------------------------- features / vocab / graphs
     def with_split(self, df: DataFrame) -> DataFrame:
