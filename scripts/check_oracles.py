@@ -43,6 +43,8 @@ def table_digest(cols: list[str], rows: list[tuple]) -> tuple[int, str]:
 
 
 def main() -> int:
+    # each result line reaches a redirected log as soon as it is printed
+    sys.stdout.reconfigure(line_buffering=True)
     only = set(sys.argv[1:])
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()

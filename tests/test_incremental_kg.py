@@ -105,67 +105,6 @@ def test_incremental_sink_crash_before_commit(spark, tmp_path):
     assert got == {("a", "r", "b"): 2}
 
 
-def test_incremental_sink_min_max_cols(spark, tmp_path, monkeypatch):
-    """min/max measures merge associatively across batches alongside sums
-    (the node-table shape: additive counts + min-observed surface)."""
-    seen = _parquet_reads(spark, monkeypatch)
-    target = str(tmp_path / "nodes")
-    sink = incremental_agg_sink(
-        spark, target, ["k"], ["n"], min_cols=["lo"], max_cols=["hi"])
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "k string, n long, lo string, hi int")
-    sink(mk([("a", 1, "m", 5), ("a", 1, "b", 9)]), 0)
-    sink(mk([("a", 1, "z", 2), ("b", 1, "q", 1)]), 1)
-    got = {r.k: (r.n, r.lo, r.hi)
-           for r in read_current_version(spark, target).collect()}
-    assert got == {"a": (3, "b", 9), "b": (1, "q", 1)}
-    _assert_read_with_inferred_schema(spark, seen, "v0")
-
-
-def test_merge_additive_sql_min_max():
-    sql = merge_additive_sql("kg.nodes", "v", ["k"], ["n"],
-                             min_cols=["lo"], max_cols=["hi"])
-    assert ("t.n = t.n + s.n, t.lo = LEAST(t.lo, s.lo), "
-            "t.hi = GREATEST(t.hi, s.hi)") in sql
-
-
-def test_stream_kg_nodes_equals_batch(spark, tiny_corpus, tmp_path):
-    """Incrementally-maintained node table == batch aggregate of the same
-    chunk→alias-link extraction."""
-    from usc_ds_relationextraction_spark.functions.tokenize import (
-        pos_tags_col, tokens_col)
-    from usc_ds_relationextraction_spark.operators.mentions import (
-        np_chunks_col)
-
-    src = str(tmp_path / "src")
-    tiny_corpus.repartition(3).write.mode("overwrite").parquet(src)
-    q = ingest.stream_kg_nodes(spark, src, str(tmp_path / "ckpt"),
-                               str(tmp_path / "nodes"))
-    try:
-        assert q.awaitTermination(180)
-    finally:
-        q.stop()
-    got = {r.entity_id: (r.n_mentions, r.first_surface, r.entity_type)
-           for r in read_current_version(
-               spark, str(tmp_path / "nodes")).collect()}
-    al = syn.kb_aliases(spark).select(
-        F.col("alias").alias("surface"), "entity_id", "entity_type") \
-        .dropDuplicates(["surface", "entity_id"])
-    batch = (spark.read.parquet(src)
-             .withColumn("toks", tokens_col("text"))
-             .withColumn("pos", pos_tags_col("toks"))
-             .withColumn("chunk", F.explode(np_chunks_col("toks", "pos")))
-             .select(F.col("chunk.surface").alias("surface"))
-             .join(F.broadcast(al), on="surface")
-             .groupBy("entity_id")
-             .agg(F.count(F.lit(1)).alias("n_mentions"),
-                  F.min("surface").alias("first_surface"),
-                  F.min("entity_type").alias("entity_type")))
-    want = {r.entity_id: (r.n_mentions, r.first_surface, r.entity_type)
-            for r in batch.collect()}
-    assert got == want and len(want) > 0
-
-
 def test_stream_kg_edges_equals_batch(spark, tiny_corpus, tmp_path):
     """readStream → triple evidence → incremental merge across ≥2
     micro-batches == one batch aggregate over the same extraction."""
@@ -195,8 +134,7 @@ def test_stream_kg_edges_equals_batch(spark, tiny_corpus, tmp_path):
 
 @pytest.mark.parametrize("builder, reads", [
     (ingest.stream_kg_edges, (1, 1)),   # aliases and facts
-    (ingest.stream_kg_nodes, (1, 0)),   # aliases only
-], ids=["edges", "nodes"])
+], ids=["edges"])
 def test_stream_kb_evaluated_once_per_query(spark, tiny_corpus, tmp_path,
                                             monkeypatch, builder, reads):
     """The stream's static KB side is evaluated once when the query

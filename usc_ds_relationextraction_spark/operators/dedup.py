@@ -387,9 +387,3 @@ def mask_shared_spans(docs: DataFrame, text_col: str = "text",
         "doc_id",
         F.coalesce(F.array_join(kept, " "), F.lit("")).alias("clean_text"),
         F.coalesce(F.size("mask"), F.lit(0)).cast("int").alias("n_masked"))
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.groupBy(F.md5(text_col).alias("content_hash")).agg(
-        F.min("doc_id").alias("canonical_id"),
-        F.count("*").alias("n_dups"))

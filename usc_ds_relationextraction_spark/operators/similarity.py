@@ -41,24 +41,6 @@ def hyperplane(plane: int, dim: int) -> list[int]:
     return [h64_py(f"plane|{plane}|{c}") % 2001 - 1000 for c in range(dim)]
 
 
-def brute_force_topk(emb: DataFrame, n_queries: int = 10, k: int = 5,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-    """Top-k neighbors by quantized dot for the first ``n_queries`` ids."""
-    base = emb.select(F.col(id_col).alias("vec_id"),
-                      quantized(vec_col).alias("q"))
-    qs = base.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq"))
-    crossed = qs.crossJoin(base.withColumnRenamed("vec_id", "nn_id")) \
-        .where(F.col("query_id") != F.col("nn_id"))
-    scored = crossed.select(
-        "query_id", "nn_id",
-        int_dot(F.col("qq"), F.col("q")).alias("qdot"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.col("nn_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("int")) \
-        .where(F.col("rk") <= k)
-
-
 def lsh_buckets(emb: DataFrame, dim: int, planes: int = 8,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """(vec_id, bucket) — sign pattern over `planes` integer hyperplanes.

@@ -40,7 +40,6 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.hashing import h64, h64_duckdb
 from ..functions.lemma import _IRREG_N, _IRREG_V, get_lemma
 from ..functions.tokenize import POS_DICT, tokens_col
-from ..operators.mentions import np_chunks_col
 
 VOWELS = "('a','e','i','o','u')"
 

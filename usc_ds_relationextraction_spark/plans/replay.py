@@ -29,9 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.features import make_rm_features_udf
-from ..functions.hashing import h64, h64_py
+from ..functions.hashing import h64_py
 from ..sources import reference_json as ref
-from ..sources.catalog import Warehouse
 
 RM_KEY_COLS = ("conv_id", "turn_idx", "em1_start", "em1_end",
                "em2_start", "em2_end")

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .training import (GRAD_SCHEMA, _agg_grads, _apply_small_grads,
-                       _hash_u01, _lookup, _neg_table, _ple_block,
+                       _hash_u01, _neg_table, _ple_block,
                        _sgns_block, _sigmoid, init_matrix_fast)
 
 N_CDF_BUCKETS = 64

@@ -13,12 +13,6 @@ Iceberg runtime jar, so parquet is the tested path — the API surface is
 format-agnostic; ``iceberg_available`` + a skip-gated test cover the
 wiring).  Per-partition row counts come from the parquet FOOTERS of the
 just-written files — no second scan.
-
-Streaming dedup (the batch path's final ``distinct()`` has no streaming
-equivalent): ``streaming_dedup_sink`` is a ``foreachBatch`` writer with
-two modes sharing one contract — ``iceberg`` issues ``MERGE INTO …
-WHEN NOT MATCHED THEN INSERT`` (:func:`merge_dedup_sql`), ``parquet``
-anti-joins the existing table then appends (the sandbox-tested path).
 """
 
 from __future__ import annotations
@@ -160,75 +154,16 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def merge_dedup_sql(target: str, source: str, key_cols: list[str]) -> str:
-    """The Iceberg MERGE the streaming sink defers dedup to: insert-only
-    upsert keyed on the triple identity — exactly-once across micro-batch
-    replays because a replayed key simply never matches NOT MATCHED."""
-    cond = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-    return (f"MERGE INTO {target} t USING {source} s ON {cond} "
-            f"WHEN NOT MATCHED THEN INSERT *")
-
-
-def streaming_dedup_sink(spark: SparkSession, target: str,
-                         key_cols: list[str], fmt: str = "parquet"):
-    """``foreachBatch`` writer with exactly-once key dedup.
-
-    fmt='iceberg': ``target`` is a catalog table name; each micro-batch
-    becomes a temp view and lands via :func:`merge_dedup_sql`.
-    fmt='parquet': ``target`` is a directory; the batch left-anti-joins
-    the keys already on disk, then lands via write-to-staging +
-    atomic rename: each micro-batch writes a complete staging directory
-    first, then its part files move into ``target`` with one ``os.rename``
-    each (atomic on a POSIX filesystem), so a crash mid-batch leaves at
-    worst a ``.staging-*`` directory that the next batch ignores — the
-    committed table never contains torn files.  foreachBatch serializes
-    batches per query; concurrent WRITERS to one target remain out of
-    contract (use the iceberg mode for that).
-    """
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        import shutil
-        d = df.dropDuplicates(key_cols)
-        if fmt == "iceberg":
-            view = f"_merge_src_{batch_id}"
-            d.createOrReplaceTempView(view)
-            spark.sql(merge_dedup_sql(target, view, key_cols))
-            spark.catalog.dropTempView(view)
-            return
-        if os.path.isdir(target) and any(
-                f.endswith(".parquet") for f in os.listdir(target)):
-            existing = spark.read.parquet(target).select(*key_cols)
-            d = d.join(existing, on=key_cols, how="left_anti")
-        staging = os.path.join(target, f".staging-{batch_id}")
-        d.write.mode("overwrite").parquet(staging)
-        # publish: atomic per-file renames of the COMPLETE staging output
-        # (prefixed with the batch id so replays cannot collide)
-        for fn in sorted(os.listdir(staging)):
-            if fn.endswith(".parquet"):
-                os.rename(os.path.join(staging, fn),
-                          os.path.join(target, f"b{batch_id}-{fn}"))
-        shutil.rmtree(staging, ignore_errors=True)
-
-    return write_batch
-
-
 # -------------------------------------------------- incremental aggregates
 def merge_additive_sql(target: str, source: str, key_cols: list[str],
-                       sum_cols: list[str],
-                       min_cols: list[str] | None = None,
-                       max_cols: list[str] | None = None) -> str:
+                       sum_cols: list[str]) -> str:
     """Iceberg MERGE for an incrementally-maintained additive aggregate
     (e.g. the canonical KG edge table's ``n_support``): matched keys add
     the batch delta, unmatched keys insert.  Additivity is the contract —
     only SUM-mergeable measures belong here (COUNT DISTINCT across
-    batches is NOT additive; keep a key-grain dedup table via
-    :func:`streaming_dedup_sink` and aggregate it on read, or use an HLL
-    sketch column)."""
+    batches is NOT additive)."""
     cond = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-    sets = ", ".join(
-        [f"t.{c} = t.{c} + s.{c}" for c in sum_cols]
-        + [f"t.{c} = LEAST(t.{c}, s.{c})" for c in (min_cols or [])]
-        + [f"t.{c} = GREATEST(t.{c}, s.{c})" for c in (max_cols or [])])
+    sets = ", ".join(f"t.{c} = t.{c} + s.{c}" for c in sum_cols)
     return (f"MERGE INTO {target} t USING {source} s ON {cond} "
             f"WHEN MATCHED THEN UPDATE SET {sets} "
             f"WHEN NOT MATCHED THEN INSERT *")
@@ -255,8 +190,6 @@ def read_current_version(spark: SparkSession, target: str) -> DataFrame | None:
 def incremental_agg_sink(spark: SparkSession, target: str,
                          key_cols: list[str], sum_cols: list[str],
                          fmt: str = "parquet",
-                         min_cols: list[str] | None = None,
-                         max_cols: list[str] | None = None,
                          stream_id: str | None = None,
                          keep_versions: int = 2):
     """``foreachBatch`` writer maintaining an ADDITIVE aggregate table
@@ -296,12 +229,10 @@ def incremental_agg_sink(spark: SparkSession, target: str,
     older than the previous one are GC'd."""
 
     def _aggs():
-        """Merge functions per measure column.  All three are
-        merge-associative (fold(batch deltas) == fold(all rows)), which
-        is exactly what makes the incremental maintenance correct."""
-        return ([F.sum(c).alias(c) for c in sum_cols]
-                + [F.min(c).alias(c) for c in (min_cols or [])]
-                + [F.max(c).alias(c) for c in (max_cols or [])])
+        """One SUM per measure column.  SUM is merge-associative
+        (fold(batch deltas) == fold(all rows)), which is exactly what
+        makes the incremental maintenance correct."""
+        return [F.sum(c).alias(c) for c in sum_cols]
 
     def _check_identity(recorded: str | None, committed: int,
                         batch_id: int) -> None:
@@ -339,8 +270,7 @@ def incremental_agg_sink(spark: SparkSession, target: str,
                 return
             view = f"_merge_add_src_{batch_id}"
             delta.createOrReplaceTempView(view)
-            spark.sql(merge_additive_sql(target, view, key_cols, sum_cols,
-                                         min_cols, max_cols))
+            spark.sql(merge_additive_sql(target, view, key_cols, sum_cols))
             spark.catalog.dropTempView(view)
             sid = "NULL" if stream_id is None else repr(stream_id)
             spark.sql(f"INSERT INTO {ledger} VALUES ({batch_id}, {sid})")

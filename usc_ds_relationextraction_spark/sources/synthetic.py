@@ -53,7 +53,6 @@ LOC = ["Springfield", "Rivertown", "Lakeside", "Hillcrest", "Meadowbrook",
 TOOLS = ["search", "calculator", "browser", "sql", "code_exec"]
 
 N_PERSON, N_ORG, N_LOC = 40, 30, 30
-N_ENT = N_PERSON + N_ORG + N_LOC  # 100
 
 # relation vocabulary, KBP-flavoured path names (reference type.txt analog)
 REL_WORKS_AT = "/business/person/company"
