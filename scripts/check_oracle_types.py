@@ -23,11 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from scripts.check_oracles import SF_DIR, TABLES  # noqa: E402
 from usc_ds_relationextraction_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 INT_FAMILY = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT",
               "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"}

@@ -5,6 +5,8 @@ Python implementations on a broad deterministic token sample."""
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pytest
 
@@ -14,7 +16,7 @@ from usc_ds_relationextraction_spark.functions.tokenize import _tag_one
 from usc_ds_relationextraction_spark.plans.parity_queries import (
     _sql_lems, _sql_pos_tag, _sql_word_shape)
 from usc_ds_relationextraction_spark.functions.features import word_shape
-from scripts.check_oracles import SF_DIR, table_digest
+from scripts.check_oracles import SF_DIR, TABLES, table_digest
 
 TOKENS = [
     "Alice", "Smith", "works", "worked", "working", "runs", "running",
@@ -36,6 +38,16 @@ def test_query_oracle_keys_align():
     # (_curated skips unknown names, so a stale entry would go unnoticed)
     stale = (set(entry._LEAD) | set(entry._DEPRIORITIZED)) - set(q)
     assert not stale, f"ordering names without queries: {stale}"
+
+
+def test_every_gate_table_is_read():
+    """Each driver table the oracle scripts register is read by some
+    oracle, so the gate's table list names no table it does not need."""
+    sql = list(entry.oracle_sql().values())
+    unread = [t for t in TABLES
+              if not any(re.search(rf"\b(FROM|JOIN)\s+{t}\b", q, re.I)
+                         for q in sql)]
+    assert not unread, f"gate tables no oracle reads: {unread}"
 
 
 # the queries that project KGPipeline's front-end operators (sentences,

@@ -152,7 +152,6 @@ def test_dep_accept_filters():
 
 
 def test_rm_dep_features_prefixing(spark):
-    from pyspark.sql import functions as F
     from usc_ds_relationextraction_spark.functions.dependencies import (
         make_rm_dep_features_udf)
     df = spark.createDataFrame(

@@ -18,10 +18,9 @@ SF = "/root/testdata/sf0.001"
 
 HEADLINE = [
     "triples_ds", "p1_tokenize", "np_chunk_mentions", "p4_pair_generation",
-    "a3_cooccur_counts", "w4_threshold_sweep", "m11_threshold_tune",
-    "dedup_exact", "dedup_minhash", "ann_topk_lsh", "ann_topk_ivf",
-    "ann_topk_ivf_nprobe", "f13_dep_features", "s1_reference_replay",
-    "dedup_substring_spans", "p3_span_alignment",
+    "a3_cooccur_real", "kg_canonical_edges", "m11_threshold_tune",
+    "ann_topk_lsh", "ann_topk_ivf", "ann_topk_ivf_nprobe",
+    "f13_dep_features", "s1_reference_replay", "p3_span_alignment",
 ]
 
 
@@ -51,20 +50,23 @@ def test_no_cartesian_product(spark, name):
 
 def test_filter_pushdown_reaches_scan(spark):
     """p8's p_size > 40 must appear in the part scan's PushedFilters —
-    the whole point of declaring the filter relationally."""
+    the whole point of declaring the filter relationally.  p8_semi_gate
+    is the one contract query with a literal filter on its scan, which
+    is why that TPC-H double is kept."""
     plan = _plan(spark, "p8_semi_gate")
     assert "PushedFilters" in plan
     assert "GreaterThan(p_size,40)" in plan.replace(" ", "")
 
 
 def test_column_pruning_reaches_scan(spark):
-    """dedup_exact projects only doc_id + text; the documents scan must
-    not read the embedding-sized payload columns."""
-    plan = _plan(spark, "dedup_exact")
-    scan = plan[plan.index("Scan parquet"):]
+    """p7_vocab_gate_encode tokenizes only doc_id + text; its documents
+    scan must read exactly those two of the table's columns."""
+    plan = _plan(spark, "p7_vocab_gate_encode")
+    scan = plan[plan.index("documents.parquet"):]
     schema_line = [ln for ln in scan.splitlines()
                    if "ReadSchema" in ln][0]
-    assert "text" in schema_line and "doc_id" in schema_line
+    assert schema_line.split("ReadSchema:")[1].strip() == \
+        "struct<doc_id:bigint,text:string>"
 
 
 def test_broadcast_joins_where_designed(spark):
@@ -76,11 +78,12 @@ def test_broadcast_joins_where_designed(spark):
 
 
 def test_partial_aggregation_on_hot_path(spark):
-    """a3_cooccur_counts must keep the map-side combine: HashAggregate
-    (partial) → Exchange → HashAggregate (final).  (Codegen spans are not
-    printed in AQE's pre-execution formatted plan, so the partial/final
-    pair is the observable invariant here.)"""
-    plan = _plan(spark, "a3_cooccur_counts")
+    """a3_cooccur_real (feature×type counts over the product mentions)
+    must keep the map-side combine: HashAggregate (partial) → Exchange →
+    HashAggregate (final), with the KB alias link broadcast.  (Codegen
+    spans are not printed in AQE's pre-execution formatted plan, so the
+    partial/final pair is the observable invariant here.)"""
+    plan = _plan(spark, "a3_cooccur_real")
     assert plan.count("HashAggregate") >= 2
     agg_first = plan.index("HashAggregate")
     assert "Exchange" in plan[agg_first:]

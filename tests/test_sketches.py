@@ -1,22 +1,18 @@
 """Arrow sketch banks ≡ their interpreted-HOF agreement oracles.
 
-The Arrow forms (functions/sketches.py) are the hot path; the HOF forms
-are retained purely so this agreement can be asserted — two independent
-derivations of the same exact-integer sketch."""
+The Arrow forms (functions/sketches.py: hyperplane-LSH bucketing and the
+exact int64 dot) are the hot path of the similarity operators; the HOF
+forms are retained purely so this agreement can be asserted — two
+independent derivations of the same exact-integer sketch."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from usc_ds_relationextraction_spark.operators import dedup, similarity
+from usc_ds_relationextraction_spark.operators import similarity
 
 SF = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
 
 
 @pytest.fixture(scope="module")
@@ -26,155 +22,6 @@ def emb(spark):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_simhash_arrow_matches_hof(spark, docs):
-    a = dedup.simhash(docs, bits=16)
-    b = dedup.simhash_hof(docs, bits=16)
-    assert _rows(a) == _rows(b)
-
-
-def test_simhash_edge_cases(spark):
-    rows = [(1, "a a a b"),        # multiset votes
-            (2, ""),               # empty → 0
-            (3, None),             # null → 0
-            (4, "   "),            # whitespace only → 0
-            (5, "unique")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r.doc_id: r.simhash for r in dedup.simhash(df, bits=16).collect()}
-    b = {r.doc_id: r.simhash
-         for r in dedup.simhash_hof(df, bits=16).collect()}
-    # HOF form yields NULL for null text (aggregate over null array);
-    # Arrow form normalizes to 0 — both mean "no tokens".  Compare with
-    # the same normalization.
-    b = {k: (v or 0) for k, v in b.items()}
-    assert a == b
-    assert a[2] == a[3] == a[4] == 0
-
-
-def test_minhash_arrow_matches_hof(spark, docs):
-    a = dedup.with_minhash(docs)
-    b = dedup.with_minhash_hof(docs)
-    assert _rows(a) == _rows(b)
-
-
-def test_minhash_edge_cases(spark):
-    rows = [(1, "a b c d"),      # 2 shingles at ngram=3
-            (2, "a b"),          # too short → -1 sigs
-            (3, ""),             # empty → -1
-            (4, None),           # null → -1
-            (5, "  a  b  c ")]   # ragged whitespace, exactly 1 shingle
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r.doc_id: tuple(r)[1:] for r in dedup.with_minhash(df).collect()}
-    b = {r.doc_id: tuple(r)[1:]
-         for r in dedup.with_minhash_hof(df).collect()}
-    # strict identity, null text included (the HOF twin coalesces null
-    # text to '' so both forms emit -1 sigs — no normalization needed)
-    assert a == b
-    assert all(x == -1 for x in a[2] + a[3] + a[4])
-    assert a[1] != a[5] and all(x >= 0 for x in a[1])
-
-
-def test_shared_span_runs_semantics(spark):
-    """Substring dedup: maximal duplicated token runs, per-diagonal;
-    hand-checkable fixture."""
-    rows = [
-        (1, "a b c d e f g h"),          # 8 tokens
-        (2, "x a b c d e y f g h"),      # shares a..e (5) and f g h (3)
-        (3, "a b c z a b c"),            # two occurrences vs doc 1's one
-        (4, "no overlap here at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.doc_a, r.doc_b, r.start_a, r.start_b): r.span_tokens
-           for r in dedup.shared_span_runs(df, min_tokens=3).collect()}
-    assert got[(1, 2, 0, 1)] == 5        # "a b c d e"
-    assert got[(1, 2, 5, 7)] == 3        # "f g h"
-    # doc1 "a b c" aligns to BOTH occurrences in doc3 (two diagonals)
-    assert got[(1, 3, 0, 0)] == 3 and got[(1, 3, 0, 4)] == 3
-    assert got[(2, 3, 1, 0)] == 3 and got[(2, 3, 1, 4)] == 3
-    assert not any(4 in (a, b) for a, b, *_ in got)
-    # min_tokens gate: at 5, only the long run survives
-    long_only = dedup.shared_span_runs(df, min_tokens=5).collect()
-    assert [(r.doc_a, r.doc_b, r.span_tokens)
-            for r in long_only] == [(1, 2, 5)]
-    # candidates restriction bounds the join (the 100 TB contract)
-    cand = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    c = dedup.shared_span_runs(df, min_tokens=3, candidates=cand).collect()
-    assert {(r.doc_a, r.doc_b) for r in c} == {(1, 2)}
-
-
-def test_mask_shared_spans(spark):
-    """Masking consumer: doc_b drops the duplicated runs, doc_a keeps
-    the canonical copy, untouched docs pass through verbatim."""
-    rows = [
-        (1, "a b c d e f g h"),
-        (2, "x a b c d e y f g h"),      # doc_b of (1,2): masks a..e + fgh
-        (4, "no overlap here at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: (r.clean_text, r.n_masked)
-           for r in dedup.mask_shared_spans(df, min_tokens=3).collect()}
-    assert got[1] == ("a b c d e f g h", 0)          # canonical copy kept
-    assert got[2] == ("x y", 8)                      # both runs dropped
-    assert got[4] == ("no overlap here at all", 0)   # untouched
-    # unordered candidate pairs are normalized, not dropped
-    cand = spark.createDataFrame([(2, 1)], "doc_a long, doc_b long")
-    got_c = {r.doc_id: r.n_masked for r in dedup.mask_shared_spans(
-        df, min_tokens=3, candidates=cand).collect()}
-    assert got_c[2] == 8 and got_c[1] == 0
-
-
-def test_cluster_canonical_union_find(spark, docs):
-    """Composed dedup final stage (verified pairs → connected components
-    → canonical per cluster) ≡ a plain-Python union-find over the SAME
-    verified pairs — independent derivation of the transitive closure."""
-    from usc_ds_relationextraction_spark.plans.extended_queries import (
-        queries)
-    ver = [(r.doc_a, r.doc_b) for r in
-           dedup.verified_near_dups(docs, min_jaccard_milli=200).collect()]
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in ver:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    all_ids = [r.doc_id for r in docs.select("doc_id").collect()]
-    want = {d: find(d) for d in all_ids}
-    got = {r.doc_id: (r.canonical_doc_id, r.is_canonical) for r in
-           queries()["dedup_cluster_canonical"](spark, SF).collect()}
-    assert len(got) == len(all_ids)
-    assert {d: c for d, (c, _) in got.items()} == want
-    # canonical flag: exactly one per cluster, on the min member
-    assert {d for d, (c, k) in got.items() if k == 1} == set(want.values())
-
-
-def test_cluster_canonical_transitive_chain(spark):
-    """A≈B and B≈C near-dup with jaccard(A,C) below τ must still land in
-    ONE cluster (near-dup is not pairwise-transitive; the cluster is)."""
-    from usc_ds_relationextraction_spark.plans.kg_materialize import (
-        connected_components)
-    base = " ".join(f"w{i}" for i in range(30))
-    mid = " ".join(f"w{i}" for i in range(10, 40))
-    far = " ".join(f"w{i}" for i in range(20, 50))
-    df = spark.createDataFrame(
-        [(1, base), (2, mid), (3, far), (9, "totally different text here")],
-        "doc_id long, text string")
-    ver = dedup.ngram_jaccard_pairs(df, min_jaccard_milli=300)
-    pairs = {(r.doc_a, r.doc_b) for r in ver.collect()}
-    assert (1, 2) in pairs and (2, 3) in pairs and (1, 3) not in pairs
-    edges = ver.selectExpr("doc_a as src", "doc_b as dst").unionAll(
-        ver.selectExpr("doc_b as src", "doc_a as dst"))
-    comp = connected_components(
-        df.selectExpr("doc_id as entity_id"), edges)
-    got = {r.entity_id: r.component_id for r in comp.collect()}
-    assert got[1] == got[2] == got[3] == 1 and got[9] == 9
 
 
 def test_lsh_buckets_arrow_matches_hof(spark, emb):
@@ -190,13 +37,13 @@ def test_lsh_buckets_many_planes(spark, emb):
     assert _rows(a) == _rows(b)
 
 
-def test_arrow_plan_has_no_row_python(spark, docs, emb):
+def test_arrow_plan_has_no_row_python(spark, emb):
     """The hot path is ArrowEvalPython (vectorized), never BatchEvalPython
     (row-at-a-time)."""
-    for df in (dedup.simhash(docs), similarity.lsh_buckets(emb, 64, 6)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" in plan
+    plan = similarity.lsh_buckets(emb, 64, 6) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" in plan
 
 
 def test_int_dot_arrow_matches_hof(spark, emb):
@@ -208,66 +55,3 @@ def test_int_dot_arrow_matches_hof(spark, emb):
     b = base.select(
         "vec_id", similarity.int_dot(F.col("q"), F.col("q")).alias("d"))
     assert _rows(a) == _rows(b)
-
-
-def test_filter_metrics_one_pass_matches_composition(spark, docs):
-    """filter_metrics (single projection) ≡ the three metric tables it
-    fuses — the zero-join corpus-gate input is value-identical to the
-    lang_id ⋈ quality_metrics ⋈ token_counts composition."""
-    from usc_ds_relationextraction_spark.functions.text_analysis import (
-        filter_metrics, lang_id, quality_metrics, token_counts)
-    m = {r.doc_id: (r.lang_pred, r.quality_milli, r.ws_tokens)
-         for r in filter_metrics(docs).collect()}
-    la = {r.doc_id: r.lang_pred for r in lang_id(docs).collect()}
-    q = {r.doc_id: r.quality_milli for r in quality_metrics(docs).collect()}
-    t = {r.doc_id: r.ws_tokens for r in token_counts(docs).collect()}
-    assert m == {d: (la[d], q[d], t[d]) for d in la}
-
-
-def test_text_metrics_null_text_is_zero_not_null(spark):
-    """NULL text must produce 0-valued metrics / 'und' / empty-token
-    counts on the Spark side — matching the DuckDB twins' CASE-WHEN
-    zeros — not ANSI-propagated NULLs (latent cross-engine divergence:
-    the committed fixtures carry no NULL text, so only this test and
-    the coalesce in ws_tokens guard the contract)."""
-    import duckdb
-    from usc_ds_relationextraction_spark.functions.text_analysis import (
-        filter_metrics, quality_metrics)
-    docs = spark.createDataFrame(
-        [(1, None), (2, "the of and is a common english sentence "
-                        "with enough tokens to clear the length gate")],
-        "doc_id bigint, text string")
-    q = {r.doc_id: r for r in quality_metrics(docs).collect()}
-    assert q[1].n_tokens == 0 and q[1].quality_milli == 0
-    m = {r.doc_id: r for r in filter_metrics(docs).collect()}
-    assert (m[1].lang_pred, m[1].quality_milli, m[1].ws_tokens) == \
-        ("und", 0, 0)
-    # DuckDB twin on the same two rows agrees field-for-field
-    con = duckdb.connect()
-    con.execute("CREATE TABLE documents AS SELECT 1::BIGINT AS doc_id, "
-                "NULL::VARCHAR AS text")
-    from usc_ds_relationextraction_spark.plans.extended_queries import (
-        oracles)
-    row = con.execute(oracles()["text_quality"]).fetchone()
-    cols = [d[0] for d in con.description]
-    duck = dict(zip(cols, row))
-    assert duck["n_tokens"] == 0 and duck["quality_milli"] == 0
-    assert duck["quality_milli"] == q[1].quality_milli
-
-
-def test_corpus_filter_verdict_semantics(spark):
-    """keep is exactly the conjunction of the three gates; drop_reason is
-    the first failing gate in the documented priority; all four verdict
-    families fire on the sf0.01 corpus."""
-    from __spark_entry__ import queries
-    rows = queries()["corpus_filter"](spark, SF).collect()
-    assert len(rows) == 500
-    for r in rows:
-        gates = [("duplicate", r.is_canonical == 0),
-                 ("language", r.lang_pred != "en"),
-                 ("quality", r.quality_milli < 450)]
-        assert r.keep == int(not any(v for _, v in gates))
-        assert r.drop_reason == next(
-            (k for k, v in gates if v), "kept")
-    assert {"duplicate", "language", "quality", "kept"} <= {
-        r.drop_reason for r in rows}

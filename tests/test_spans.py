@@ -12,8 +12,6 @@ Reference: DataProcessor/nlp_parse.py:162-178 (find_index), 82-96
 
 from __future__ import annotations
 
-import pytest
-
 from usc_ds_relationextraction_spark.operators.spans import (
     align_spans, build_alias_index)
 from usc_ds_relationextraction_spark.plans import parity_queries as pq

@@ -1,24 +1,21 @@
-"""Arrow-vectorized sketch banks (SimHash, hyperplane-LSH, int-dot).
+"""Arrow-vectorized sketch banks (hyperplane-LSH, int-dot).
 
 Why this module exists: Spark higher-order functions evaluate INTERPRETED,
 and CollapseProject inlines any column reference inside their lambdas as
 the full upstream expression, re-evaluated at every reference.  The HOF
-forms of these sketches (``operators/dedup.simhash_hof``,
-``operators/similarity.lsh_buckets_hof``) therefore pay
-bits×|tokens| / planes×dim interpreted passes PER ROW — measured 13.5 s
+form of the bucketing sketch (``operators/similarity.lsh_buckets_hof``)
+therefore pays planes×dim interpreted passes PER ROW — measured 13.5 s
 for 500 rows of 6-plane bucketing vs 1.5 s in DuckDB.  The same pathology
 class was fixed in ``streaming/ingest.py`` (52 s → 6 s at 175k turns).
 
-The fix is one Arrow crossing per batch: the whole plane/bit bank runs as
-a NumPy matmul / bit-parallel vote inside a pandas UDF.  Values are
-BIT-IDENTICAL to the HOF forms (and therefore to the DuckDB oracles):
+The fix is one Arrow crossing per batch: the whole plane bank runs as a
+NumPy matmul inside a pandas UDF.  Values are BIT-IDENTICAL to the HOF
+form (and therefore to the DuckDB oracles):
  - quantization ``floor(x·1000 + 0.5)`` maps to the same IEEE-double ops
    (float32→float64 cast is exact, ·/+/floor are correctly rounded);
- - token hashes are the same md5-derived 60-bit ints
-   (:func:`..functions.hashing.h64_py` == the ``h64`` SQL expression);
  - everything downstream is exact int64 arithmetic.
 
-The HOF twins are retained as agreement oracles
+The HOF twin is retained as an agreement oracle
 (``tests/test_sketches.py`` asserts Arrow ≡ HOF on the driver tables).
 
 Reference analog: the reference computes feature sketches eagerly in
@@ -29,145 +26,11 @@ executors — the distributable form.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-# Executor-resident token→h64 memo.  Bounded: past the cap we still
-# compute, we just stop inserting (protects long-lived workers against
-# unbounded vocab at corpus scale).
-_TOKEN_MEMO: dict[str, int] = {}
-_TOKEN_MEMO_CAP = 1 << 20
-
-
-def _h64_token(tok: str) -> int:
-    h = _TOKEN_MEMO.get(tok)
-    if h is None:
-        h = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
-        if len(_TOKEN_MEMO) < _TOKEN_MEMO_CAP:
-            _TOKEN_MEMO[tok] = h
-    return h
-
-
-def simhash_batch(texts: pd.Series, bits: int) -> pd.Series:
-    """Vectorized bit-majority SimHash over whitespace tokens.
-
-    Multiset semantics (repeated tokens vote repeatedly); empty/null text
-    hashes to 0 — both exactly as the HOF/SQL form.
-    """
-    masks = (np.int64(1) << np.arange(bits, dtype=np.int64))
-    n = len(texts)
-    toks_list = []
-    for t in texts:
-        toks_list.append([x for x in t.split(" ") if x] if t else [])
-    counts = np.fromiter((len(tk) for tk in toks_list), dtype=np.int64,
-                         count=n)
-    out = np.zeros(n, dtype=np.int64)
-    nz = counts > 0
-    if not nz.any():
-        return pd.Series(out)
-    flat = [tok for tk in toks_list for tok in tk]
-    # hash only UNIQUE tokens in the batch (factorize is vectorized C);
-    # the md5 memo then amortizes across batches on long-lived workers
-    codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
-    uh = np.fromiter((_h64_token(tok) for tok in uniques), dtype=np.int64,
-                     count=len(uniques))
-    hs = uh[codes]
-    # +1/-1 votes per (token, bit); segment-sum per row via reduceat
-    votes = ((hs[:, None] & masks[None, :]) > 0).astype(np.int32) * 2 - 1
-    bounds = np.zeros(n, dtype=np.int64)
-    bounds[1:] = np.cumsum(counts)[:-1]
-    # reduceat over non-empty rows only: each segment runs to the next
-    # non-empty row's start (empty rows contribute no tokens in between)
-    seg = np.add.reduceat(votes, bounds[nz], axis=0)
-    out[nz] = ((seg > 0) * masks[None, :]).sum(axis=1)
-    return pd.Series(out)
-
-
-def simhash_arrow(text: Column | str, bits: int = 16) -> Column:
-    """Column form of :func:`simhash_batch` (one Arrow crossing/batch)."""
-    @pandas_udf("bigint")
-    def _f(s: pd.Series) -> pd.Series:
-        return simhash_batch(s, bits)
-    c = F.col(text) if isinstance(text, str) else text
-    return _f(c)
-
-
-def minhash_batch(texts: pd.Series, perms: int, ngram: int) -> pd.DataFrame:
-    """Vectorized MinHash signatures over word n-gram shingles.
-
-    Value-identical to the HOF/SQL form (``operators/dedup``): per perm
-    ``i``, min over shingle windows of ``mix_i(shg(window))`` where the
-    shingle hash is the token-rolling combine of per-token md5 hashes
-    (:func:`..functions.hashing.shingle_coeffs`) and ``mix_i`` the affine
-    permutation (:func:`..functions.hashing.minhash_mix_consts`).  md5
-    runs ONCE per unique TOKEN in the batch (factorize + cross-batch
-    memo); shingle construction, the perm bank, and the per-row minima
-    are all vectorized int64 — no per-shingle Python, no string joins.
-    Docs with no shingle (short/empty/null text) sign as -1.
-    """
-    from .hashing import (MASK30, MASK60, minhash_mix_consts,
-                          shingle_coeffs)
-    ab = minhash_mix_consts(perms)
-    A = np.array([a for a, _ in ab], dtype=np.int64)
-    B = np.array([b for _, b in ab], dtype=np.int64)
-    C = shingle_coeffs(ngram)
-    n = len(texts)
-    tok_lists: list[list[str]] = []
-    for t in texts:
-        tok_lists.append([x for x in t.split(" ") if x]
-                         if isinstance(t, str) else [])
-    counts = np.fromiter((len(tk) for tk in tok_lists), dtype=np.int64,
-                         count=n)
-    out = np.full((n, perms), -1, dtype=np.int64)
-    scounts = np.maximum(counts - (ngram - 1), 0)
-    nz = scounts > 0
-    total = int(counts.sum())
-    if nz.any():
-        flat = [tok for tk in tok_lists for tok in tk]
-        codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
-        uh = np.fromiter((_h64_token(tok) for tok in uniques),
-                         dtype=np.int64, count=len(uniques))
-        th = uh[codes]                       # flat token hashes
-
-        def mul60(h: np.ndarray, c: int) -> np.ndarray:
-            # (h·c) mod 2**60 via the split product: every term < 2**60,
-            # the 2-term sum < 2**61 — exact in int64
-            return (((h & MASK30) * c
-                     + (((h >> 30) * c) & MASK30) * (1 << 30)) & MASK60)
-
-        # token-rolling shingle hash at every flat window, then drop
-        # windows that straddle a row boundary
-        L = total - (ngram - 1)
-        sh = np.zeros(L, dtype=np.int64)
-        for j, c in enumerate(C):
-            sh = (sh + mul60(th[j:j + L], c)) & MASK60
-        row_of = np.repeat(np.arange(n), counts)
-        sh = sh[row_of[:L] == row_of[ngram - 1:]]  # row-sorted survivors
-        lo, hi = sh & MASK30, sh >> 30
-        mixed = ((lo[:, None] * A[None, :]
-                  + ((hi[:, None] * A[None, :]) & MASK30) * (1 << 30)
-                  + B[None, :]) & MASK60)
-        bounds = np.zeros(n, dtype=np.int64)
-        bounds[1:] = np.cumsum(scounts)[:-1]
-        out[nz] = np.minimum.reduceat(mixed, bounds[nz], axis=0)
-    return pd.DataFrame({f"sig{i}": out[:, i] for i in range(perms)})
-
-
-def minhash_arrow(text: Column | str, perms: int, ngram: int) -> Column:
-    """Struct column of :func:`minhash_batch` (one Arrow crossing/batch)."""
-    fields = ", ".join(f"sig{i}: bigint" for i in range(perms))
-
-    @pandas_udf(f"struct<{fields}>")
-    def _f(s: pd.Series) -> pd.DataFrame:
-        return minhash_batch(s, perms, ngram)
-
-    c = F.col(text) if isinstance(text, str) else text
-    return _f(c)
 
 
 def _stack_vectors(vecs: pd.Series, dim: int) -> np.ndarray:

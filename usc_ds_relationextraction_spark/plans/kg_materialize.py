@@ -181,21 +181,16 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     Only EDGE-INCIDENT vertices ride the rounds: an isolated vertex has
     no neighbor to read and no reader, so its label (itself) is final
     before round 1 — it is split off with one anti-join and unioned
-    back at the end.  In the corpus-dedup regime this is most of the
-    corpus (a 1M-doc run: 78% isolated; at web scale with ~10% near-dup
-    incidence it is 80–95%), and each round's join AND checkpoint
-    materialization shrink by that factor while the result is
-    row-for-row identical.
+    back at the end.  Each round's join AND checkpoint materialization
+    shrink by the isolated share while the result is row-for-row
+    identical.
 
     ``vertices``: one column ``entity_id``; ``edges``: ``src``/``dst``
     with both directions present.  The edge table is checkpointed ONCE
-    at loop entry: callers hand in edges as the tail of an expensive
-    lazy chain (verified LSH near-dup pairs, token-blocking joins), and
+    at loop entry: callers hand in edges as the tail of a lazy chain
+    (the token-blocking join of :func:`alias_blocking_edges`), and
     without materialization every round's join re-executes that whole
-    upstream chain — measured at the 1M-doc corpus gate, the rounds
-    were re-running the ~40 s sig+band+verify pipeline each, making CC
-    look round-dominated when it was actually upstream-recompute-
-    dominated."""
+    upstream chain."""
     e = edges.select("src", "dst").localCheckpoint(eager=True)
     incident = F.broadcast(e.select(F.col("src").alias("entity_id"))
                            .distinct())
