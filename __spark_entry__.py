@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship KG-construction slice on sf0.001.
 ``queries()`` exposes one entry per implemented operator from SURVEY.md §2
-(plus the similarity/ANN and multimodal entries); ``oracle_sql()`` gives
+(plus the multimodal entries); ``oracle_sql()`` gives
 each a DuckDB twin over the same parquet inputs.
 
 The distant-supervision front-end queries (``p1_tokenize``,
@@ -18,8 +18,9 @@ usc_ds_relationextraction_spark/functions/hashing.py):
  - portable 60-bit hash: Spark ``conv(substring(md5(x),1,15),16,10)``
    == DuckDB ``('0x'||substr(md5(x),1,15))::bigint``
  - no raw float aggregates cross-engine: money/quantity scaled to integer
-   cents before SUM; similarity scores integer-quantized (×1000) so dot
-   products are exact integer arithmetic in both engines.
+   cents before SUM; embedding values and weights integer-quantized
+   (×1000) so sums and means are exact integer arithmetic in both
+   engines.
 """
 
 from __future__ import annotations
@@ -321,31 +322,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy("l_partkey").agg(F.count("*").alias("n"))
     Q["p8_semi_gate"] = p8_semi_gate
 
-    # ---------------- similarity (embeddings) ---------------------------
-    def sim_cosine_topk(spark, sf):
-        from pyspark.sql import Window
-        e = _t(spark, sf, "embeddings")
-        # floor(x*1000 + 0.5), not round(): round-half semantics differ
-        # across engines; floor is identical everywhere
-        qv = F.transform("embedding",
-                         lambda x: F.floor(x.cast("double") * 1000 + 0.5)
-                         .cast("bigint"))
-        base = e.select("vec_id", qv.alias("q"))
-        queries_ = base.where("vec_id < 10") \
-            .select(F.col("vec_id").alias("query_id"),
-                    F.col("q").alias("qq"))
-        crossed = queries_.crossJoin(base.withColumnRenamed("vec_id", "nn_id")) \
-            .where(F.col("query_id") != F.col("nn_id"))
-        dot = F.aggregate(
-            F.zip_with("qq", "q", lambda a, b: a * b),
-            F.lit(0).cast("bigint"), lambda acc, x: acc + x)
-        scored = crossed.select("query_id", "nn_id", dot.alias("qdot"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("qdot"), F.col("nn_id"))
-        return scored.withColumn("rk", F.row_number().over(w)) \
-            .where("rk <= 5")
-    Q["sim_cosine_topk"] = sim_cosine_topk
-
     from usc_ds_relationextraction_spark.plans import (extended_queries,
                                                        gate_queries,
                                                        kg_materialize,
@@ -376,10 +352,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # operator whose implementation changed this round.
 _DEPRIORITIZED = [
     "p8_semi_gate", "a7_supertype_pairs", "a2_mention_histogram",
-    "mm_binary_stats", "sim_cosine_topk",
-    "a9_label_centroids", "p2_unicode_norm", "p6_lemma",
+    "mm_binary_stats", "p2_unicode_norm", "p6_lemma",
     "a1_vocab_encode", "p7_vocab_gate_encode", "mm_decode_features",
-    "p3_span_alignment", "a5_cumulative_table", "j7_centroid_assign",
+    "p3_span_alignment", "a5_cumulative_table",
 ]
 
 # Names guaranteed a slot in the driver's 50-query snapshot: this round's
@@ -516,28 +491,6 @@ WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size > 40)
 GROUP BY l_partkey
 """
 
-    O["sim_cosine_topk"] = """
-WITH base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5)
-                                  AS BIGINT)) AS q
-  FROM embeddings
-),
-crossed AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS nn_id,
-         CAST(list_sum(list_transform(generate_series(1, len(a.q)),
-                                      i -> a.q[i] * b.q[i])) AS BIGINT) AS qdot
-  FROM base a JOIN base b ON a.vec_id < 10 AND a.vec_id <> b.vec_id
-)
-SELECT query_id, nn_id, qdot,
-       CAST(rk AS INT) AS rk
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY qdot DESC, nn_id) AS rk
-  FROM crossed
-) WHERE rk <= 5
-"""
     from usc_ds_relationextraction_spark.plans import (extended_queries,
                                                        gate_queries,
                                                        kg_materialize,

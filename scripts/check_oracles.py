@@ -21,7 +21,7 @@ from usc_ds_relationextraction_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 # the driver tables some oracle reads (tests/test_contract.py checks it)
-TABLES = ["part", "lineitem", "events", "documents", "embeddings"]
+TABLES = ["part", "lineitem", "events", "documents"]
 
 
 def norm_cell(v) -> str:

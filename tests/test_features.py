@@ -149,18 +149,3 @@ def test_dep_accept_filters():
     assert not accept_dep("det")
     assert accept_pos("NNP") and accept_pos("VBD")
     assert not accept_pos("JJ") and not accept_pos(".")
-
-
-def test_rm_dep_features_prefixing(spark):
-    from usc_ds_relationextraction_spark.functions.dependencies import (
-        make_rm_dep_features_udf)
-    df = spark.createDataFrame(
-        [(["Alice", "Smith", "works", "at", "Acme", "Corp", "."],
-          ["NNP", "NNP", "VBZ", "IN", "NNP", "NNP", "."], 0, 2, 4, 6)],
-        "toks array<string>, pos array<string>, s1 int, e1 int, "
-        "s2 int, e2 int")
-    udf = make_rm_dep_features_udf()
-    feats = df.select(udf("toks", "pos", "s1", "e1", "s2", "e2")
-                      .alias("f")).collect()[0]["f"]
-    assert "DEP_EM1_dep:nsubj:work=V" in feats
-    assert "DEP_EM2_dep:prep_at:work=V" in feats

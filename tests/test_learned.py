@@ -7,6 +7,8 @@ P/R>=0.95 parity target (full-size runs reach 0.97/0.97).
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -69,6 +71,55 @@ def test_min_max_zero_clamp(spark):
     # min clamps to 0 even though all scores > 0
     assert abs(out[1] - 0.5 / (0.5 + 1e-8)) < 1e-9
     assert abs(out[2] - 0.25 / (0.5 + 1e-8)) < 1e-9
+
+
+def _score_types_py(mentions, types, sim, none_id):
+    """Plain-loop oracle of ``inference.score_types``: types in id order,
+    a later type wins only on a strictly larger score (ties keep the
+    smaller id), and a best score of exactly 0 maps to ``none_id``."""
+    out = {}
+    for mid, m in mentions:
+        best_id, best = None, None
+        for tid, y in sorted(types):
+            s = sum(a * b for a, b in zip(m, y))
+            if sim == "cosine":
+                nm = math.sqrt(sum(a * a for a in m))
+                ny = math.sqrt(sum(b * b for b in y))
+                s = s / (nm * ny) if nm and ny else 0.0
+            if best is None or s > best + 1e-12:
+                best_id, best = tid, s
+        out[mid] = (none_id if best == 0.0 else best_id, best)
+    return out
+
+
+def test_score_types_matches_loop_oracle(spark):
+    """J7/M7/M8: argmax over all types, by cosine or by dot."""
+    none_id = 0
+    # inserted out of id order: the product sorts by id before the argmax
+    types = [(7, [0.0, 3.0]), (4, [1.0, 0.0]), (9, [-1.0, -1.0])]
+    mentions = [
+        (1, [2.0, 1.0]),   # cosine picks 4, dot picks 7 (|y7| = 3)
+        (2, [1.0, 1.0]),   # cosine tie between 4 and 7 -> 4
+        (3, [3.0, 1.0]),   # dot tie between 4 and 7 -> 4
+        (4, [0.0, 0.0]),   # all-zero vector -> none_id
+        (5, [-1.0, -2.0]),
+    ]
+    m_df = spark.createDataFrame(mentions,
+                                 "mention_id long, vec array<double>")
+    y_df = spark.createDataFrame(types, "id long, vec array<double>")
+    got = {}
+    for sim in ("cosine", "dot"):
+        rows = inf.score_types(spark, m_df, y_df, sim, none_id).collect()
+        got[sim] = {r["mention_id"]: (r["type_id"], r["score"])
+                    for r in rows}
+        want = _score_types_py(mentions, types, sim, none_id)
+        assert {k: v[0] for k, v in got[sim].items()} == \
+            {k: v[0] for k, v in want.items()}, sim
+        for k, (_, s) in want.items():
+            assert got[sim][k][1] == pytest.approx(s, abs=1e-12), (sim, k)
+    assert got["cosine"][1][0] == 4 and got["dot"][1][0] == 7
+    assert got["cosine"][2][0] == 4 and got["dot"][3][0] == 4
+    assert got["cosine"][4] == (none_id, 0.0) == got["dot"][4]
 
 
 def test_evaluate_rm_neg_protocol(spark):

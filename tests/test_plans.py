@@ -19,7 +19,6 @@ SF = "/root/testdata/sf0.001"
 HEADLINE = [
     "triples_ds", "p1_tokenize", "np_chunk_mentions", "p4_pair_generation",
     "a3_cooccur_real", "kg_canonical_edges", "m11_threshold_tune",
-    "ann_topk_lsh", "ann_topk_ivf", "ann_topk_ivf_nprobe",
     "f13_dep_features", "s1_reference_replay", "p3_span_alignment",
 ]
 
@@ -42,9 +41,7 @@ def test_no_row_python_udfs(spark, name):
 @pytest.mark.parametrize("name", HEADLINE)
 def test_no_cartesian_product(spark, name):
     """CartesianProduct = an unpartitioned full cross — never acceptable
-    in the headline set (sim_cosine_topk, the documented correctness-tier
-    crossJoin, is intentionally absent from this list; its cross is a
-    BroadcastNestedLoopJoin over the 10-row query side anyway)."""
+    in the headline set."""
     assert "CartesianProduct" not in _plan(spark, name)
 
 

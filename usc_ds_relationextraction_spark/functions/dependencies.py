@@ -135,30 +135,3 @@ def make_rm_dep_features_from_arcs():
         return pd.Series(out)
 
     return rm_dep_arcs_udf
-
-
-def make_rm_dep_features_udf():
-    """(toks, pos, em1_start, em1_end, em2_start, em2_end) →
-    array<string> — the F13 RM analog: per-side emission with DEP_EM1_ /
-    DEP_EM2_ prefixes (the reference never registered an RM format; the
-    prefix convention follows this repo's other RM families)."""
-
-    @pandas_udf("array<string>")
-    def rm_dep_udf(toks: pd.Series, pos: pd.Series, s1: pd.Series,
-                   e1: pd.Series, s2: pd.Series, e2: pd.Series) -> pd.Series:
-        out = []
-        for tk, pg, a, b, c, d in zip(toks, pos, s1, e1, s2, e2):
-            tk = list(tk)
-            pg = list(pg)
-            arcs = pattern_arcs_py(tk, pg)
-            feats = [
-                "DEP_EM1_" + f[4:]
-                for f in dep_features_py(tk, pg, arcs, int(a), int(b))
-            ] + [
-                "DEP_EM2_" + f[4:]
-                for f in dep_features_py(tk, pg, arcs, int(c), int(d))
-            ]
-            out.append(feats)
-        return pd.Series(out)
-
-    return rm_dep_udf

@@ -7,9 +7,8 @@ can serve, so Catalyst plans a BroadcastNestedLoopJoin that evaluates
 O(|turns| x |aliases|) INTERPRETED overlap checks; each surviving pair
 then pays an interpreted ``filter(sequence)/slice`` window scan, and
 CollapseProject re-inlines the ``hits`` expression at every downstream
-reference (the same pathology class fixed in ``streaming/ingest.py``
-and ``functions/sketches.py``).  At 10^12 turns the nested-loop factor
-alone is disqualifying.
+reference (the same pathology class fixed in ``streaming/ingest.py``).
+At 10^12 turns the nested-loop factor alone is disqualifying.
 
 The fused form scans each turn ONCE against a first-token-indexed alias
 dictionary (Aho–Corasick-lite): per token position, hash-probe the

@@ -103,17 +103,6 @@ def threshold_cut(normalized: DataFrame, threshold: float) -> DataFrame:
     return normalized.where(F.col("score_norm") > threshold)
 
 
-def predict(spark: SparkSession, mention_feature_test: DataFrame,
-            emb_feature: DataFrame, emb_type: DataFrame,
-            none_type_id: int | None, sim: str = "cosine",
-            threshold: float = 0.0, dim: int = 50) -> DataFrame:
-    """Full §3.2 DAG → (mention_id, type_id, score_norm)."""
-    me = mention_embeddings(mention_feature_test, emb_feature, dim)
-    scored = score_types(spark, me, emb_type, sim, none_type_id)
-    return threshold_cut(min_max_normalize(scored), threshold) \
-        .select("mention_id", "type_id", F.col("score_norm").alias("score"))
-
-
 def materialize_triples(predictions: DataFrame, rm_pairs: DataFrame,
                         type_vocab: DataFrame,
                         none_label: str = "None") -> DataFrame:
