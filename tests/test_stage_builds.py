@@ -158,3 +158,32 @@ def test_torn_parquet_stage_is_rebuilt(spark, tmp_path):
     assert out.count() == 5
     assert wh.exists("t")
     assert [r["stage"] for r in wh.metrics()] == ["t"]
+
+
+def test_local_file_system_sets_modes_in_process(spark, tmp_path):
+    """``file:`` is the in-process local file system ``get_spark`` builds,
+    and it sets the modes Hadoop asks for: a new directory's (umask
+    applied), a file's, and a sticky directory's, which still takes
+    Hadoop's ``chmod`` path."""
+    from usc_ds_relationextraction_spark import session
+    if session._local_fs_classes() is None:
+        pytest.skip("javac cannot build the in-process local file system")
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration())
+    assert fs.getClass().getName() == session._LOCAL_FS
+    path = jvm.org.apache.hadoop.fs.Path
+    perm = jvm.org.apache.hadoop.fs.permission.FsPermission
+
+    def mode(p):
+        return os.stat(p).st_mode & 0o7777
+
+    d = tmp_path / "a" / "b"
+    assert fs.mkdirs(path(str(d)), perm(0o770))
+    assert (mode(d.parent), mode(d)) == (0o755, 0o750)
+    f = d / "f"
+    f.write_bytes(b"x")
+    fs.setPermission(path(str(f)), perm(0o604))
+    assert mode(f) == 0o604
+    fs.setPermission(path(str(d)), perm(0o1777))
+    assert mode(d) == 0o1777

@@ -14,19 +14,71 @@ KG pipeline that first call is ``kg_components``' alias blocking, so the
 stall held every task slot while ``kg_entities`` and ``kg_edges`` waited.
 The two agree on every alias in the KB fixtures (ASCII; tested), and
 differ only on a few special-cased non-ASCII strings.
+
+The local file system (``file:``) is ``jvm/InProcessLocalFileSystem``,
+compiled on first use: without the native Hadoop library, Hadoop's own
+spawns a ``chmod`` process for every directory and most files a write
+makes (about 290 per ``kg_batch`` build), and each spawn briefly clones
+the Spark JVM.  It applies only to a JVM this function launches, and
+only where ``javac`` can build the class; elsewhere Hadoop's stays.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_LOCAL_FS = "usc_ds_relationextraction_spark.jvm.InProcessLocalFileSystem"
+_LOCAL_FS_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "jvm", "InProcessLocalFileSystem.java")
 
 
 def _default_driver_memory() -> str:
     """Half the host's physical memory, capped at 16g, in megabytes."""
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{min(phys // 2, 16 << 30) >> 20}m"
+
+
+def _local_fs_classes() -> str | None:
+    """Class directory of the in-process local file system, built next to
+    its source once per source version; None where it cannot be built
+    (no ``javac``, no Spark jars, a read-only or zipped package)."""
+    try:
+        with open(_LOCAL_FS_SRC, "rb") as fh:
+            digest = hashlib.sha1(fh.read()).hexdigest()[:12]
+    except OSError:
+        return None
+    out = os.path.join(os.path.dirname(_LOCAL_FS_SRC), "build-" + digest)
+    if os.path.isdir(out):
+        return out
+    javac = shutil.which("javac")
+    jars = glob.glob(os.path.join(_find_spark_home(), "jars",
+                                  "hadoop-client-api-*.jar"))
+    if javac is None or not jars:
+        return None
+    try:
+        tmp = tempfile.mkdtemp(prefix=".build-",
+                               dir=os.path.dirname(_LOCAL_FS_SRC))
+    except OSError:
+        return None
+    try:
+        # class format 61: loads on any JVM Spark 4 runs on (17+)
+        subprocess.run([javac, "--release", "17", "-nowarn", "-cp", jars[0],
+                        "-d", tmp, _LOCAL_FS_SRC],
+                       check=True, capture_output=True)
+        os.rename(tmp, out)  # a concurrent build that finished first wins
+    except (OSError, subprocess.CalledProcessError):
+        pass
+    shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
 
 
 def get_spark(
@@ -73,6 +125,16 @@ def get_spark(
         # JVM case mapping: no ICU start-up stall on a JVM's first lower()
         .config("spark.sql.icu.caseMappings.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # a running JVM (this process's, or spark-submit's) keeps its classpath
+    launches_jvm = SparkContext._gateway is None \
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+    fs_classes = _local_fs_classes() if launches_jvm else None
+    if fs_classes is not None:
+        key = "spark.driver.extraClassPath"
+        extra_conf[key] = os.pathsep.join(
+            p for p in (extra_conf.get(key), fs_classes) if p)
+        builder = builder.config("spark.hadoop.fs.file.impl", _LOCAL_FS)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
